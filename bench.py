@@ -167,37 +167,11 @@ def _time_queries(spark, sf_dir: str) -> dict[str, float]:
 SESSION_RERUN_DRIFT = 1.15
 
 
-def _baseline_queries(sf: float) -> tuple[str, dict[str, float]]:
-    """Per-query timings from the newest BENCH_r{N}.json at the same sf
-    (the driver writes one per round), or ('', {}) when none exists."""
-    best: tuple[int, str, dict[str, float]] | None = None
-    for path in glob.glob(os.path.join(os.path.dirname(__file__) or ".", "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", path)
-        if not m:
-            continue
-        try:
-            with open(path) as f:
-                parsed = json.load(f).get("parsed") or {}
-        except (OSError, json.JSONDecodeError):
-            continue
-        if parsed.get("sf") != sf or not parsed.get("queries"):
-            continue
-        rnd = int(m.group(1))
-        if best is None or rnd > best[0]:
-            best = (rnd, os.path.basename(path), parsed["queries"])
-    if best is None:
-        return "", {}
-    return best[1], best[2]
-
-
-def _best_of_recent_rounds(sf: float, n_rounds: int = 3) -> dict[str, float]:
-    """Per-query MIN across the newest ``n_rounds`` committed
-    BENCH_r{N}.json records at the same sf (round-13 VERDICT item 2):
-    comparing only against the PRIOR round lets a slow stair-step —
-    +20% a round, each step under the 1.5x trigger — compound into a
-    2x regression that no single round ever flags. The best-of-last-3
-    floor is what graph_mass_propagation's r11->r13 creep slid under."""
-    rounds: list[tuple[int, dict[str, float]]] = []
+def _bench_records(sf: float) -> list[tuple[int, str, dict[str, float]]]:
+    """(round, file name, per-query timings) for every committed
+    BENCH_r{N}.json at ``sf``. Variants such as BENCH_r14_c8.json (a
+    core-count re-run) and unreadable files are skipped."""
+    records = []
     for path in glob.glob(
         os.path.join(os.path.dirname(__file__) or ".", "BENCH_r*.json")
     ):
@@ -211,10 +185,30 @@ def _best_of_recent_rounds(sf: float, n_rounds: int = 3) -> dict[str, float]:
             continue
         if parsed.get("sf") != sf or not parsed.get("queries"):
             continue
-        rounds.append((int(m.group(1)), parsed["queries"]))
-    rounds.sort(reverse=True)
+        records.append((int(m.group(1)), os.path.basename(path), parsed["queries"]))
+    return records
+
+
+def _baseline_queries(sf: float) -> tuple[str, dict[str, float]]:
+    """Per-query timings from the newest BENCH_r{N}.json at the same sf
+    (the driver writes one per round), or ('', {}) when none exists."""
+    records = _bench_records(sf)
+    if not records:
+        return "", {}
+    _, name, queries = max(records, key=lambda r: r[0])
+    return name, queries
+
+
+def _best_of_recent_rounds(sf: float, n_rounds: int = 3) -> dict[str, float]:
+    """Per-query MIN across the newest ``n_rounds`` committed
+    BENCH_r{N}.json records at the same sf (round-13 VERDICT item 2):
+    comparing only against the PRIOR round lets a slow stair-step —
+    +20% a round, each step under the 1.5x trigger — compound into a
+    2x regression that no single round ever flags. The best-of-last-3
+    floor is what graph_mass_propagation's r11->r13 creep slid under."""
+    rounds = sorted(_bench_records(sf), key=lambda r: r[0], reverse=True)
     best: dict[str, float] = {}
-    for _, queries in rounds[:n_rounds]:
+    for _, _, queries in rounds[:n_rounds]:
         for name, sec in queries.items():
             if isinstance(sec, (int, float)) and sec > 0:
                 best[name] = min(best.get(name, float("inf")), float(sec))

@@ -29,7 +29,7 @@ whole T-iteration run hash-matches an unrolled SQL twin.
 SCALE: the Spark shape is the canonical distributed Lloyd's — centroids
 live on the driver (k × d ints, bounded_collect-guarded) and ship as a
 task-closure ndarray into an Arrow-batched NumPy assignment pass
-(mapInPandas; exact int64 arithmetic, so results stay bit-identical —
+(mapInArrow; exact int64 arithmetic, so results stay bit-identical —
 the former scan-stage zip_with folds were interpreted per element and
 dominated every clustering query, see kmeans_fit);
 the update is ONE map-side-combinable groupBy(cluster, dim) aggregate
@@ -45,27 +45,26 @@ document embeddings).
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mapreduce__spark.operators.staging import bounded_collect
+from mapreduce__spark.operators.staging import (
+    bounded_collect,
+    bounded_int64,
+    int64_matrix,
+)
 
 QUANT_SCALE = 1_000_000  # micro-units
 QUANT_OFFSET = 1 << 21  # shifts quantized values non-negative
 MAX_KMEANS_DIMS = 4096  # bound for the driver-held centroid table
 
-# Driver fast-path bounds for the FIT loop (round 15, the
-# connected_components / k_core_layers hybrid transferred): when the
-# quantized corpus fits under both bounds, the Lloyd iterations run
-# locally over one Arrow collect instead of paying (1 + iterations)
-# scheduled jobs — the round-14 scaling block showed the clustering
-# tail is job-count-bound at bench scale (sf0.01 PQ queries spend their
-# wall in per-subspace seed + per-iteration collects, not compute).
-# Every quantity in the local loop is the SAME exact int64 arithmetic
-# as the distributed partial-sum pass (integer sums are
-# order-independent), so the fitted centroids are bit-identical —
-# property-tested. The FINAL assignment stays distributed either way
-# (its output is corpus-sized). Above the bounds nothing changes.
+# Driver-path bounds for the FIT loop (staging.bounded_int64 decides):
+# under both, the Lloyd iterations run locally over one Arrow collect
+# instead of paying (1 + iterations) scheduled jobs — the clustering tail
+# is job-count-bound at bench scale. The FINAL assignment stays
+# distributed either way (its output is corpus-sized).
 KMEANS_DRIVER_MAX_VECS = 131_072  # rows collected (limit bound+1 probe)
 KMEANS_DRIVER_MAX_CELLS = 16_777_216  # rows x dims cap (~128 MB int64)
 
@@ -97,17 +96,69 @@ def kmeans_assign(
     return kmeans_fit(embeddings, k, iterations, vec_col)[0]
 
 
+# Arrow-batched NumPy assignment (round-14 optimization pass, guide
+# §4.2): the former scan-stage zip_with/aggregate distance folds are
+# higher-order functions, which run on Catalyst's INTERPRETED path —
+# ~k*d lambda evaluations plus array allocations per row made the
+# 3-iteration fit the dominant cost of every clustering query (A/B'd
+# 4.05s -> 1.99s warm at sf0.1, then 1.61s -> 1.22s again with fused
+# per-batch partial sums — identical assignments AND centroids in both
+# steps). All arithmetic is int64: quantized values are <= 2^22 after
+# the offset, so (x-y)^2 <= 2^44 and the d-term sum <= 2^44 *
+# MAX_KMEANS_DIMS < 2^63 — NumPy int64 reproduces the JVM bigint result
+# bit-for-bit. Looping over centroids bounds temp memory at one
+# n_batch x d matrix per step (lower
+# spark.sql.execution.arrow.maxRecordsPerBatch for very wide embeddings).
+def _assign(cents: "np.ndarray", x: "np.ndarray"):
+    """Nearest centroid per row of ``x`` and the exact int64 squared
+    distance to it; the strict ``<`` keeps the LOWEST centroid id on
+    distance ties (the SQL twin's struct-min order)."""
+    best_d = ((x - cents[0]) ** 2).sum(axis=1)
+    best_c = np.zeros(len(x), dtype=np.int64)
+    for j in range(1, len(cents)):
+        dj = ((x - cents[j]) ** 2).sum(axis=1)
+        upd = dj < best_d
+        best_d[upd] = dj[upd]
+        best_c[upd] = j
+    return best_c, best_d
+
+
+def _cluster_sums(cents: "np.ndarray", x: "np.ndarray"):
+    """One Lloyd step over the rows of ``x`` — assign, then per-cluster
+    (ids, int64 sums, counts) — on the whole corpus (driver fit) or one
+    Arrow batch (distributed pass); integer sums make both bit-identical."""
+    best_c, _ = _assign(cents, x)
+    ids, inv = np.unique(best_c, return_inverse=True)
+    sums = np.zeros((len(ids), x.shape[1]), dtype=np.int64)
+    np.add.at(sums, inv, x)
+    return ids, sums, np.bincount(inv, minlength=len(ids)).astype(np.int64)
+
+
+def _vectors(batch: "pa.RecordBatch", dims: int) -> "np.ndarray":
+    """A batch's ``eq`` column via the probe's reshape, failing loudly."""
+    x = int64_matrix(batch.column("eq"), dims)
+    if x is None:
+        raise ValueError(
+            f"kmeans_fit: NULL or ragged embedding (every vector must hold "
+            f"{dims} non-NULL elements)"
+        )
+    return x
+
+
 def kmeans_fit(
     embeddings: DataFrame,
     k: int,
     iterations: int,
     vec_col: str = "embedding",
-    driver_max_vecs: int = KMEANS_DRIVER_MAX_VECS,
 ) -> tuple[DataFrame, list[list[int]]]:
     """kmeans_assign plus the fitted CODEBOOK: returns (assignments,
     final centroids) where centroids[cid] is the k x d integer table the
     final assignment ran against — the piece product-quantization search
-    (ann_topk_pq_adc) needs to build its asymmetric-distance lookup."""
+    (ann_topk_pq_adc) needs to build its asymmetric-distance lookup.
+
+    Corpora under the KMEANS_DRIVER_* bounds (staging.bounded_int64)
+    iterate on the driver; larger ones, and NULL or ragged embeddings,
+    take the distributed pass, which fails loudly on the latter."""
     q = _quantized(embeddings, vec_col).localCheckpoint(eager=False)
 
     seeds = bounded_collect(
@@ -130,151 +181,59 @@ def kmeans_fit(
     dims = len(centroids[0])
     assert dims <= MAX_KMEANS_DIMS
 
-    # Driver fast path: one Arrow collect replaces the per-iteration
-    # scan+collect jobs when the corpus is provably small. The dims are
-    # known from the seeds, so the cell cap is checked BEFORE collecting
-    # (a 4096-dim corpus never attempts a wide collect); the row cap is
-    # enforced by limit(bound + 1) so the probe itself is bounded.
-    row_bound = min(driver_max_vecs, KMEANS_DRIVER_MAX_CELLS // dims)
+    cents = np.asarray(centroids, dtype=np.int64)
 
-    # Arrow-batched NumPy assignment (round-14 optimization pass, guide
-    # §4.2): the former scan-stage zip_with/aggregate distance folds are
-    # higher-order functions, which run on Catalyst's INTERPRETED path —
-    # ~k*d lambda evaluations plus array allocations per row made the
-    # 3-iteration fit the dominant cost of every clustering query (A/B'd
-    # 4.05s -> 1.99s warm at sf0.1, then 1.61s -> 1.22s again with the
-    # fused partial sums below — identical assignments AND centroids in
-    # both steps; the former one-row broadcast-DataFrame centroid table —
-    # round-10 item 4 — solved plan-size growth but left the per-element
-    # interpretation). All arithmetic is int64: quantized values are
-    # <= 2^22 after the offset, so (x-y)^2 <= 2^44 and the d-term sum
-    # <= 2^44 * MAX_KMEANS_DIMS < 2^63 — NumPy int64 reproduces the JVM
-    # bigint result bit-for-bit, and the strict `<` update keeps the
-    # LOWEST centroid id on distance ties, exactly the former struct-min
-    # tie order. The centroid table is a task-closure ndarray (k*d
-    # int64s, the same payload the broadcast carried); looping over
-    # centroids bounds temp memory at one n_batch x d matrix per step
-    # (lower spark.sql.execution.arrow.maxRecordsPerBatch for very wide
-    # embeddings).
-    import numpy as np
-    import pandas as pd
+    local = bounded_int64(
+        q, ["eq"], min(KMEANS_DRIVER_MAX_VECS, KMEANS_DRIVER_MAX_CELLS // max(dims, 1))
+    )
 
-    def _assign_np(cents: "np.ndarray", x: "np.ndarray"):
-        best_d = ((x - cents[0]) ** 2).sum(axis=1)
-        best_c = np.zeros(len(x), dtype=np.int64)
-        for j in range(1, len(cents)):
-            dj = ((x - cents[j]) ** 2).sum(axis=1)
-            upd = dj < best_d
-            best_d[upd] = dj[upd]
-            best_c[upd] = j
-        return best_c, best_d
-
-    def _update_local(x: "np.ndarray", cents_list: list) -> list:
-        """One Lloyd update over an in-memory matrix — the same int64
-        assignment + per-cluster sums // counts the distributed pass
-        computes (integer sums are order-independent, so the result is
-        bit-identical to the shuffled partial-sum path)."""
-        cents = np.asarray(cents_list, dtype=np.int64)
-        best_c, _ = _assign_np(cents, x)
-        nxt = [list(c) for c in cents_list]  # empty cluster keeps centroid
-        for c in np.unique(best_c):
-            m = best_c == c
-            s = x[m].sum(axis=0)
-            n = int(m.sum())
-            nxt[int(c)] = [int(v) // n for v in s]
-        return nxt
-
-    # ---- driver fast path: one bounded Arrow collect, local iterations
-    fitted_locally = False
-    if row_bound > 0:
-        head = q.limit(row_bound + 1).toArrow()
-        if head.num_rows <= row_bound:
-            eqs = head.column("eq").combine_chunks()
-            lens = np.diff(eqs.offsets.to_numpy(zero_copy_only=False))
-            if len(lens) == 0 or (lens == dims).all():
-                flat = eqs.values.to_numpy(zero_copy_only=False).astype(
-                    np.int64, copy=False
-                )
-                x_all = flat.reshape(head.num_rows, dims)
-                for _ in range(iterations):
-                    centroids = _update_local(x_all, centroids)
-                fitted_locally = True
-            # ragged dims (contract violation) fall through to the
-            # distributed loop, which fails the same way it always did
-
-    for _ in range(0 if fitted_locally else iterations):
-        cents = np.asarray(centroids, dtype=np.int64)
-
-        # Fused update pass: each batch emits its own per-(cluster, dim)
-        # partial sums DIRECTLY from the Python worker — the d-wide eq
-        # column never crosses back out of Python and the former
-        # posexplode (d rows per vector) + hash-aggregate stage is gone;
-        # the shuffle carries <= batches * k * d tiny rows. Per-batch
-        # sums stay in int64 trivially (<= 2^22 * batch rows); the global
-        # groupBy re-sums exactly the same integers the old
-        # posexplode+sum produced.
-        def partials(batches, cents=cents):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                x = np.array(pdf["eq"].tolist(), dtype=np.int64)
-                best_c, _ = _assign_np(cents, x)
-                # vectorized row construction (round-14 ADVICE): the
-                # former per-(cluster, dim) Python append loop boxed
-                # k*d ints per batch
-                ucs, inv = np.unique(best_c, return_inverse=True)
-                d = x.shape[1]
-                sums_m = np.zeros((len(ucs), d), dtype=np.int64)
-                np.add.at(sums_m, inv, x)
-                counts = np.bincount(inv, minlength=len(ucs)).astype(np.int64)
-                yield pd.DataFrame(
-                    {
-                        "cluster_id": np.repeat(ucs, d),
-                        "i": np.tile(np.arange(d, dtype=np.int32), len(ucs)),
-                        "s": sums_m.ravel(),
-                        "n": np.repeat(counts, d),
-                    }
+    # Fused update pass: each batch emits its own per-(cluster, dim)
+    # partial sums directly from the Python worker — the d-wide eq column
+    # never crosses back out of Python; the shuffle carries <= batches *
+    # k * d tiny rows. Per-batch sums stay in int64 trivially. Reads the
+    # current iteration's ``cents``, which stay fixed until its collect.
+    def partials(batches):
+        for batch in batches:
+            if batch.num_rows:
+                ids, sums, counts = _cluster_sums(cents, _vectors(batch, dims))
+                i = np.tile(np.arange(dims, dtype=np.int32), len(ids))
+                yield pa.RecordBatch.from_arrays(
+                    [np.repeat(ids, dims), i, sums.ravel(), np.repeat(counts, dims)],
+                    names=["cluster_id", "i", "s", "n"],
                 )
 
-        sums = bounded_collect(
-            q.mapInPandas(
-                partials, "cluster_id bigint, i int, s bigint, n bigint"
-            )
-            .groupBy("cluster_id", "i")
-            .agg(F.sum("s").alias("s"), F.sum("n").alias("n")),
-            k * dims,
-            "kmeans centroid sums",
-        )
-        nxt = [list(c) for c in centroids]  # empty cluster keeps centroid
-        for r in sums:
-            # exact integer mean; values are non-negative by the offset,
-            # so floor-div == truncating div on every engine
-            nxt[r.cluster_id][r.i] = r.s // r.n
-        centroids = nxt
+    for _ in range(iterations):
+        # exact integer means (values are non-negative by the offset, so
+        # floor-div == truncating div on every engine); an empty cluster
+        # keeps its centroid
+        nxt = cents.copy()
+        if local is not None:
+            ids, sums, counts = _cluster_sums(cents, local[0])
+            nxt[ids] = sums // counts[:, None]
+        else:
+            for r in bounded_collect(
+                q.mapInArrow(partials, "cluster_id bigint, i int, s bigint, n bigint")
+                .groupBy("cluster_id", "i")
+                .agg(F.sum("s").alias("s"), F.sum("n").alias("n")),
+                k * dims,
+                "kmeans centroid sums",
+            ):
+                nxt[r.cluster_id, r.i] = r.s // r.n
+        cents = nxt
 
     # Final assignment: emits only (vec_id, cluster_id, dist2) —
-    # mapInPandas is opaque to column pruning, so the pass must not ship
+    # mapInArrow is opaque to column pruning, so the pass must not ship
     # the d-wide eq back out of the Python workers only for a select to
     # drop it.
-    final_cents = np.asarray(centroids, dtype=np.int64)
-
-    def final_assign(batches, cents=final_cents):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.array(pdf["eq"].tolist(), dtype=np.int64)
-            best_c, best_d = _assign_np(cents, x)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "cluster_id": best_c,
-                    "dist2": best_d,
-                }
+    def final_assign(batches):
+        for batch in batches:
+            best_c, best_d = _assign(cents, _vectors(batch, dims))
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("vec_id").cast(pa.int64()), best_c, best_d],
+                names=["vec_id", "cluster_id", "dist2"],
             )
 
     return (
-        q.mapInPandas(
-            final_assign, "vec_id bigint, cluster_id bigint, dist2 bigint"
-        ),
-        centroids,
+        q.mapInArrow(final_assign, "vec_id bigint, cluster_id bigint, dist2 bigint"),
+        cents.tolist(),
     )

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mapreduce__spark.operators.staging import bounded_int64
+
 
 def propagate_mass(
     edges: DataFrame,
@@ -213,40 +215,41 @@ def count_triangles(
     )
 
 
+# Driver-path bound for connected_components: at or under this many
+# edge rows (staging.bounded_int64 decides) a driver union-find replaces
+# 2 Spark jobs per propagation round — near-dup graphs are SPARSE even
+# on huge corpora, the pairs already survived an LSH + verify gate.
+CC_DRIVER_MAX_EDGES = 100_000
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "id1",
     dst: str = "id2",
     max_iter: int = 20,
     checkpoint_every: int = 5,
-    driver_threshold: int = 100_000,
 ) -> DataFrame:
     """Return (node, component) where component = min node id reachable.
 
     `edges` is an undirected pair list (each pair once, any orientation).
-
-    Hybrid execution: when the edge list fits comfortably on the driver
-    (≤ `driver_threshold` edges — near-dup graphs are SPARSE even on huge
-    corpora, the pairs already survived an LSH + verify gate), a
-    driver-side union-find finishes in microseconds instead of paying
-    2 Spark jobs per propagation round. Larger graphs run the distributed
-    label-propagation loop below. Same result either way (tested).
+    Under :data:`CC_DRIVER_MAX_EDGES` integral, non-NULL edges a driver
+    union-find finishes the job; otherwise the distributed
+    label-propagation loop below runs. Same result either way (tested).
 
     The edge list is eagerly materialized FIRST: it is narrow (two ids) but
     its upstream plan is typically the whole LSH+verify pipeline, and this
-    operator re-reads edges multiple times (threshold probe + collect on
-    the driver path; every propagation round re-derives `sym` on the
-    distributed path). Without materialization the LSH candidate join
-    re-executes per action/round — measured 2x on the flagship pipeline.
+    operator re-reads edges multiple times (the probe on the driver path;
+    every propagation round re-derives `sym` on the distributed path).
+    Without materialization the LSH candidate join re-executes per
+    action/round — measured 2x on the flagship pipeline.
     (A probe-first variant that skipped this checkpoint was tried and
     REVERTED: `limit(N).collect()` on the lazy plan executes it through
     CollectLimit's incremental partition-wave strategy, re-running the
     candidate join subtree per wave — measured ~1.6x on the flagship.)
     """
     edges = edges.select(src, dst).localCheckpoint(eager=True)
-    head = edges.limit(driver_threshold + 1).collect()
-    if len(head) <= driver_threshold:
-        pairs = [(r[0], r[1]) for r in head]
+    local = bounded_int64(edges, [src, dst], CC_DRIVER_MAX_EDGES)
+    if local is not None:
         parent: dict = {}
 
         def find(x):
@@ -255,31 +258,18 @@ def connected_components(
                 x = parent[x]
             return x
 
-        for a, b in pairs:
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                # union by MIN id so the representative is the smallest node
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        rows = [(n, find(n)) for n in parent]
-        # Widen node/component to the COMMON type of src and dst via the
-        # same union coercion the distributed path applies — a schema
-        # built from src alone would reject (or narrow) dst ids of a
-        # wider type, making the two execution paths return different
-        # schemas for the same input.
-        from pyspark.sql.types import StructField, StructType
-
-        node_field = (
-            edges.select(edges[src].alias("node"))
-            .unionAll(edges.select(edges[dst].alias("node")))
-            .schema[0]
+        for a, b in zip(*(c.tolist() for c in local)):
+            ra, rb = find(parent.setdefault(a, a)), find(parent.setdefault(b, b))
+            # union by MIN id so the representative is the smallest node
+            parent[max(ra, rb)] = min(ra, rb)
+        # node/component take the COMMON type of src and dst via the same
+        # union coercion the distributed path applies, so both paths
+        # return one schema (and wider dst ids are not narrowed)
+        t = edges.select(src).unionAll(edges.select(dst)).schema[0].dataType
+        return edges.sparkSession.createDataFrame(
+            [(n, find(n)) for n in parent],
+            f"node {t.simpleString()}, component {t.simpleString()}",
         )
-        schema = StructType(
-            [node_field, StructField("component", node_field.dataType, True)]
-        )
-        return edges.sparkSession.createDataFrame(rows or [], schema)
 
     # symmetrize + self-loops so isolated orientation doesn't matter
     fwd = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -340,14 +330,10 @@ def connected_components(
 # the threshold.
 KCORE_REWRITE_FRACTION = 0.05
 
-# Driver fast-path bound for k_core_layers, the connected_components
-# hybrid transferred (round 15): at or under this many edge rows the
-# peel runs as a vectorized NumPy loop on the driver (two int64 columns
-# collected via Arrow — 32 MB at the bound) instead of paying 5 rounds
-# x several AQE stage-jobs of Spark scheduling for a graph that fits in
-# one task. Above the bound the distributed loop below runs unchanged —
-# the bound is an edge-ROW count checked with limit(bound+1), so the
-# decision itself never scans more than bound+1 rows.
+# Driver-path bound for k_core_layers (staging.bounded_int64 decides): at
+# or under this many edge rows (two int64 columns, 32 MB at the bound)
+# the peel runs in vectorized NumPy instead of paying 5 rounds x several
+# AQE stage-jobs of Spark scheduling for a graph that fits in one task.
 KCORE_DRIVER_MAX_EDGES = 2_000_000
 
 
@@ -404,7 +390,6 @@ def k_core_layers(
     src: str = "u",
     dst: str = "v",
     rewrite_fraction: float = KCORE_REWRITE_FRACTION,
-    driver_threshold: int = KCORE_DRIVER_MAX_EDGES,
 ) -> DataFrame:
     """Fixed-k core peeling with LAYER attribution: iteratively remove
     every node whose degree among the still-alive nodes is below ``k``,
@@ -440,27 +425,14 @@ def k_core_layers(
     derived as a shallow anti-join chain over the already-materialized
     removed sets instead of being re-checkpointed per round — 1 job per
     round instead of 3 (29 -> ~10 jobs per query at sf0.1), identical
-    relations at every step. Small graphs skip the loop entirely: the
-    :data:`KCORE_DRIVER_MAX_EDGES` hybrid (same shape as
-    :func:`connected_components`' driver_threshold) collects the edge
-    list via Arrow and peels in vectorized NumPy — identical rows
-    (tested against the distributed path), with integral node ids
-    (every caller's) returned as bigint either way."""
+    relations at every step. Graphs under :data:`KCORE_DRIVER_MAX_EDGES`
+    integral, non-NULL edges skip the loop and peel on the driver —
+    identical rows (tested against the distributed path), node ids
+    returned as bigint either way."""
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    if driver_threshold > 0:
-        head = e.limit(driver_threshold + 1).toArrow()
-        if head.num_rows <= driver_threshold:
-            import numpy as np
-
-            u = head.column("a").to_numpy(zero_copy_only=False).astype(
-                np.int64, copy=False
-            )
-            v = head.column("b").to_numpy(zero_copy_only=False).astype(
-                np.int64, copy=False
-            )
-            return _k_core_layers_driver(
-                edges.sparkSession, u, v, k, max_rounds
-            )
+    local = bounded_int64(e, ["a", "b"], KCORE_DRIVER_MAX_EDGES)
+    if local is not None:
+        return _k_core_layers_driver(edges.sparkSession, *local, k, max_rounds)
     adj = e.unionAll(
         e.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).localCheckpoint(eager=False)

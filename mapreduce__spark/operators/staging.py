@@ -18,12 +18,17 @@ producing lineage. Two shapes exist:
 
 Both shapes truncate lineage and are value-identical
 (tests/test_staging.py pins equality at sf0.001).
+
+The driver-or-distributed seam lives here too: :func:`bounded_int64`
+decides for connected_components, k_core_layers and kmeans_fit.
 """
 
 from __future__ import annotations
 
 import posixpath
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 
 
@@ -47,6 +52,41 @@ def bounded_collect(df: DataFrame, max_rows: int, what: str) -> list:
             "unbounded driver-side materialization"
         )
     return rows
+
+
+def int64_matrix(lists: pa.ListArray, width: int | None = None):
+    """``(n, width)`` int64 reshape of a ``list<integer>`` array's flat
+    values, or ``None`` on a NULL list or element or a list whose length
+    is not ``width`` (default: the first list's)."""
+    lens = np.diff(lists.offsets.to_numpy())
+    width = (int(lens[0]) if len(lens) else 0) if width is None else width
+    flat = lists.flatten()
+    if lists.null_count or flat.null_count or (lens != width).any():
+        return None
+    return flat.to_numpy().astype(np.int64, copy=False).reshape(len(lists), width)
+
+
+def bounded_int64(df: DataFrame, cols: list[str], max_rows: int):
+    """``cols`` as int64 arrays (1-D, or ``(n, width)`` for integer lists)
+    from ONE ``limit(max_rows + 1)`` Arrow job, or ``None`` — run the
+    distributed path — past ``max_rows`` rows or on a non-integral
+    column, a NULL value or element, or ragged or zero-width lists."""
+    head = df.select(*cols).limit(max_rows + 1).toArrow()
+    if head.num_rows > max_rows:
+        return None
+    out = []
+    for name in cols:
+        col = head.column(name).combine_chunks()
+        if pa.types.is_list(col.type) and pa.types.is_integer(col.type.value_type):
+            arr = int64_matrix(col)
+            if arr is None or arr.shape[1] == 0:
+                return None
+        elif pa.types.is_integer(col.type) and not col.null_count:
+            arr = col.to_numpy().astype(np.int64, copy=False)
+        else:
+            return None
+        out.append(arr)
+    return out
 
 
 def stage(df: DataFrame, staging_dir: str | None, name: str) -> DataFrame:

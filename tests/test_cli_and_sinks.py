@@ -183,6 +183,8 @@ def test_bench_best_of_recent_rounds():
     rounds = []
     for path in glob.glob("/root/repo/BENCH_r*.json"):
         m = _re.search(r"BENCH_r(\d+)\.json$", path)
+        if not m:  # e.g. BENCH_r14_c8.json, a core-count variant
+            continue
         with open(path) as f:
             parsed = _json.load(f).get("parsed") or {}
         if parsed.get("sf") == 0.1 and parsed.get("queries"):

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+from mapreduce__spark.operators import graph
 from mapreduce__spark.operators.graph import connected_components
 
 
@@ -35,17 +36,22 @@ def test_empty_edges(spark):
     assert connected_components(df).collect() == []
 
 
-def test_driver_and_distributed_paths_agree(spark):
+def test_driver_and_distributed_paths_agree(spark, monkeypatch):
     """The union-find fast path and the label-propagation loop must
-    produce identical components (force the loop via driver_threshold=0)."""
-    edges = [(i, i + 1) for i in range(1, 9)] + [(20, 21), (21, 22), (30, 31)]
-    df = spark.createDataFrame(edges, "id1 bigint, id2 bigint")
-    fast = {(r.node, r.component) for r in connected_components(df).collect()}
-    dist = {
-        (r.node, r.component)
-        for r in connected_components(df, driver_threshold=0).collect()
-    }
-    assert fast == dist and len(fast) == 14  # 9 + 3 + 2 nodes
+    produce identical components (force the loop via a zero bound). A
+    NULL id breaks the driver path's contract, so it falls through to the
+    loop instead of crashing the union-find."""
+    chains = [(i, i + 1) for i in range(1, 9)] + [(20, 21), (21, 22), (30, 31)]
+    for edges, n_nodes in ((chains, 14), (chains + [(40, None)], 16)):
+        df = spark.createDataFrame(edges, "id1 bigint, id2 bigint")
+        fast = {(r.node, r.component) for r in connected_components(df).collect()}
+        with monkeypatch.context() as m:
+            m.setattr(graph, "CC_DRIVER_MAX_EDGES", 0)
+            dist = {
+                (r.node, r.component)
+                for r in connected_components(df).collect()
+            }
+        assert fast == dist and len(fast) == n_nodes  # 9 + 3 + 2 (+ 2) nodes
 
 
 def test_propagate_mass_matches_hand_fold(spark):
@@ -91,7 +97,7 @@ def test_propagate_mass_rejects_bad_k(spark):
         propagate_mass(df, k=0)
 
 
-def test_distributed_cc_raises_when_unconverged(spark):
+def test_distributed_cc_raises_when_unconverged(spark, monkeypatch):
     """A component whose diameter exceeds max_iter must fail loudly —
     returning the still-moving labels would report one real cluster as
     several components (dedup would keep multiple representatives)."""
@@ -99,10 +105,11 @@ def test_distributed_cc_raises_when_unconverged(spark):
 
     chain = [(i, i + 1) for i in range(10)]
     edges = spark.createDataFrame(chain, "id1 bigint, id2 bigint")
+    monkeypatch.setattr(graph, "CC_DRIVER_MAX_EDGES", 0)
     with pytest.raises(RuntimeError, match="still changing"):
-        connected_components(edges, driver_threshold=0, max_iter=2)
+        connected_components(edges, max_iter=2)
     # the same graph converges with an adequate budget
-    ok = connected_components(edges, driver_threshold=0, max_iter=12)
+    ok = connected_components(edges, max_iter=12)
     assert {r.component for r in ok.collect()} == {0}
 
 
@@ -127,7 +134,7 @@ def test_driver_path_widens_mixed_key_types(spark):
 
 from itertools import combinations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from mapreduce__spark.operators.graph import count_triangles
@@ -208,26 +215,71 @@ def test_triangles_match_bruteforce(spark, edges):
         max_size=25,
     )
 )
+@example({(0, 1), (1, 2), (2, 0), (2, None)})
 @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
 def test_kcore_driver_path_matches_distributed(spark, edges):
     """The KCORE_DRIVER_MAX_EDGES fast path is a pure materialization
     choice: on random graphs the NumPy driver peel and the distributed
-    loop return identical (node, layer, residual_degree) rows."""
-    from mapreduce__spark.operators.graph import k_core_layers
+    loop return identical (node, layer, residual_degree) rows. A NULL
+    endpoint falls through to the loop instead of peeling as an
+    int64-min node."""
+    from unittest import mock
 
     if not edges:
         return
-    df = spark.createDataFrame(sorted(edges), "u bigint, v bigint")
+    df = spark.createDataFrame(sorted(edges, key=str), "u bigint, v bigint")
 
-    def rows(threshold):
+    def rows(bound):
+        with mock.patch.object(graph, "KCORE_DRIVER_MAX_EDGES", bound):
+            return {
+                (r.node, r.layer, r.residual_degree)
+                for r in graph.k_core_layers(df, 2, max_rounds=6).collect()
+            }
+
+    fast = rows(10**6)
+    assert fast == rows(0)
+    assert all(node != -(2**63) for node, _, _ in fast)
+
+
+def test_k_core_changed_fraction_guard_is_value_neutral(spark, monkeypatch):
+    """Round-9 verdict item 7: the adjacency rewrite guard is a pure
+    materialization choice. Peeling with always-rewrite (fraction 0),
+    the default threshold, and never-rewrite (fraction huge) must
+    produce identical (node, layer, residual_degree) rows on a graph
+    engineered to peel a large first layer then tiny late layers (the
+    case the guard exists for)."""
+    # hub clique (0-5 all-pairs: survives k=3), a long chain that peels
+    # one-end-at-a-time (tiny late rounds), and pendant leaves (big
+    # round 1)
+    edges = []
+    for i in range(6):
+        for j in range(i + 1, 6):
+            edges.append((i, j))
+    chain = [10, 11, 12, 13, 14, 15]
+    edges += list(zip(chain, chain[1:]))
+    edges += [(0, 10), (1, 11), (2, 12)]
+    edges += [(i, 100 + i) for i in range(6)]  # leaves
+    df = spark.createDataFrame(edges, "u bigint, v bigint")
+    # a zero bound forces the distributed loop — the rewrite guard under
+    # test lives there; the driver fast path has no adjacency rewrite
+    # (its equivalence is tested above)
+    monkeypatch.setattr(graph, "KCORE_DRIVER_MAX_EDGES", 0)
+
+    def run(frac):
         return {
             (r.node, r.layer, r.residual_degree)
-            for r in k_core_layers(
-                df, 2, max_rounds=6, driver_threshold=threshold
+            for r in graph.k_core_layers(
+                df, 3, max_rounds=6, rewrite_fraction=frac
             ).collect()
         }
 
-    assert rows(10**6) == rows(0)
+    always = run(0.0)
+    default = run(0.05)
+    never = run(10.0**9)
+    assert always == default == never
+    # sanity: the clique survives as the 3-core, leaves fall in layer 1
+    assert {(i, 0) for i in range(6)} <= {(n, l) for n, l, _ in always}
+    assert all(l == 1 for n, l, _ in always if n >= 100)
 
 
 def test_kcore_fixtures_converge_inside_the_unroll(spark, sf_small):

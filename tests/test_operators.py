@@ -319,14 +319,19 @@ def test_lang_id_tie_order(spark):
     assert got == ["en", "de", "fr", "en"]  # all-zero hits tie -> 'en'
 
 
-def test_search_cli_on_reference_dir(spark):
-    """Run the Search client against the reference repo's own directory —
-    the exact workload shape of Search.cpp's CLI."""
+def test_search_cli_on_reference_dir(spark, tmp_path):
+    """Run the Search client against a copy of the reference repo's
+    directory listing (its four files: Makefile, MapReduceFramework.cpp,
+    Search.cpp, README) — the exact workload shape of Search.cpp's CLI.
+    Search matches file NAMES, so the contents are placeholders."""
     from mapreduce__spark.search_cli import search
 
-    got = [r.file for r in search(spark, "Make", ["/root/reference"]).collect()]
+    for name in ("Makefile", "MapReduceFramework.cpp", "Search.cpp", "README"):
+        (tmp_path / name).write_text(f"{name}\n")
+    ref = str(tmp_path)
+    got = [r.file for r in search(spark, "Make", [ref]).collect()]
     assert got == ["Makefile"]  # case-sensitive substring: only Makefile
-    got = [r.file for r in search(spark, ".cpp", ["/root/reference"]).collect()]
+    got = [r.file for r in search(spark, ".cpp", [ref]).collect()]
     assert got == ["MapReduceFramework.cpp", "Search.cpp"]
 
 

@@ -94,48 +94,6 @@ print("OK")
     assert out.returncode == 0 and "OK" in out.stdout, out.stderr[-2000:]
 
 
-def test_k_core_changed_fraction_guard_is_value_neutral(spark):
-    """Round-9 verdict item 7: the adjacency rewrite guard is a pure
-    materialization choice. Peeling with always-rewrite (fraction 0),
-    the default threshold, and never-rewrite (fraction huge) must
-    produce identical (node, layer, residual_degree) rows on a graph
-    engineered to peel a large first layer then tiny late layers (the
-    case the guard exists for)."""
-    from mapreduce__spark.operators.graph import k_core_layers
-
-    # hub clique (0-5 all-pairs: survives k=3), a long chain that peels
-    # one-end-at-a-time (tiny late rounds), and pendant leaves (big
-    # round 1)
-    edges = []
-    for i in range(6):
-        for j in range(i + 1, 6):
-            edges.append((i, j))
-    chain = [10, 11, 12, 13, 14, 15]
-    edges += list(zip(chain, chain[1:]))
-    edges += [(0, 10), (1, 11), (2, 12)]
-    edges += [(i, 100 + i) for i in range(6)]  # leaves
-    df = spark.createDataFrame(edges, "u bigint, v bigint")
-
-    def run(frac):
-        # driver_threshold=0 forces the distributed loop — the rewrite
-        # guard under test lives there; the driver fast path has no
-        # adjacency rewrite (its equivalence is tested in test_graph.py)
-        return {
-            (r.node, r.layer, r.residual_degree)
-            for r in k_core_layers(
-                df, 3, max_rounds=6, rewrite_fraction=frac, driver_threshold=0
-            ).collect()
-        }
-
-    always = run(0.0)
-    default = run(0.05)
-    never = run(10.0**9)
-    assert always == default == never
-    # sanity: the clique survives as the 3-core, leaves fall in layer 1
-    assert {(i, 0) for i in range(6)} <= {(n, l) for n, l, _ in always}
-    assert all(l == 1 for n, l, _ in always if n >= 100)
-
-
 def test_ann_bucketed_recall_report_vs_bruteforce(spark, sf_oracle, capsys):
     """ann_topk_buckets declares BUCKETING as its contract (exactly
     oracle-checked); this test carries the recall story: measure top-5

@@ -59,89 +59,6 @@ def test_fuzzy_join_lossless_on_random_strings(spark, names):
     assert got == want
 
 
-def _kmeans_py(vecs, k, iters):
-    """Pure-Python integer Lloyd's (the third implementation — Spark
-    expressions and unrolled DuckDB SQL are the other two)."""
-    import math
-
-    OFF = 1 << 21
-    q = {
-        vid: [math.floor(float(x) * 1_000_000) + OFF for x in v]
-        for vid, v in vecs.items()
-    }
-    cents = [list(q[vid]) for vid in sorted(q)[:k]]
-
-    def assign():
-        return {
-            vid: min(
-                (sum((a - b) * (a - b) for a, b in zip(eq, c)), j)
-                for j, c in enumerate(cents)
-            )
-            for vid, eq in q.items()
-        }
-
-    for _ in range(iters):
-        a = assign()
-        for j in range(k):
-            mem = [q[v] for v, (_, c) in a.items() if c == j]
-            if mem:
-                cents[j] = [sum(col) // len(mem) for col in zip(*mem)]
-    return {v: (c, d) for v, (d, c) in assign().items()}
-
-
-# coarse grid values force distance TIES (the argmin tie-break path)
-# and duplicate vectors force EMPTY clusters
-_vec = st.lists(
-    st.sampled_from([-0.25, -0.1, 0.0, 0.1, 0.25]), min_size=3, max_size=3
-)
-_vecs = st.lists(_vec, min_size=4, max_size=10)
-
-
-@given(_vecs, st.integers(min_value=2, max_value=3))
-@settings(
-    max_examples=10, deadline=None, suppress_health_check=list(HealthCheck)
-)
-def test_kmeans_matches_python_on_random_grids(spark, vecs, k):
-    """kmeans_assign == pure-Python integer Lloyd's on random coarse-grid
-    vectors: ties, duplicate seeds, and empty clusters all land on the
-    same deterministic answer."""
-    from mapreduce__spark.operators.clustering import kmeans_assign
-
-    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    narrowed = {r.vec_id: list(r.embedding) for r in df.collect()}
-    got = {
-        r.vec_id: (r.cluster_id, r.dist2)
-        for r in kmeans_assign(df, k, 2).collect()
-    }
-    assert got == _kmeans_py(narrowed, k, 2)
-
-
-@given(_vecs, st.integers(min_value=2, max_value=3))
-@settings(
-    max_examples=10, deadline=None, suppress_health_check=list(HealthCheck)
-)
-def test_kmeans_driver_fit_matches_distributed(spark, vecs, k):
-    """The KMEANS_DRIVER_MAX_VECS fast path is a pure materialization
-    choice: forcing the distributed iteration loop (driver_max_vecs=0)
-    yields bit-identical assignments AND centroids."""
-    from mapreduce__spark.operators.clustering import kmeans_fit
-
-    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-
-    def run(bound):
-        a, cents = kmeans_fit(df, k, 2, driver_max_vecs=bound)
-        return {
-            r.vec_id: (r.cluster_id, r.dist2) for r in a.collect()
-        }, cents
-
-    a_local, c_local = run(10**6)
-    a_dist, c_dist = run(0)
-    assert a_local == a_dist
-    assert c_local == c_dist
-
-
 # -------------------------------------------------- prefix-filter jaccard
 
 # Docs over a tiny vocabulary with lengths just past the 3-gram floor:
