@@ -31,11 +31,12 @@ live on the driver (k × d ints, bounded_collect-guarded) and ship as a
 task-closure ndarray into an Arrow-batched NumPy assignment pass
 (mapInArrow; exact int64 arithmetic, so results stay bit-identical —
 the former scan-stage zip_with folds were interpreted per element and
-dominated every clustering query, see kmeans_fit);
-the update is ONE map-side-combinable groupBy(cluster, dim) aggregate
-per iteration. Per-iteration cost: one corpus scan + one k·d-key
-shuffle; nothing corpus-sized ever materializes or ships. Empty
-clusters keep their previous centroid (both engines).
+dominated every clustering query, see pq_fit);
+the update is ONE map-side-combinable groupBy(subspace, cluster, dim)
+aggregate per iteration, for every product-quantization subspace at
+once. Per-iteration cost: one corpus scan + one k·d-key shuffle;
+nothing corpus-sized ever materializes or ships. Empty clusters keep
+their previous centroid (both engines).
 
 Reference provenance: the reference has no iterative operators
 (SURVEY §2b lists them under engine extensions); this is tier-2
@@ -64,7 +65,9 @@ MAX_KMEANS_DIMS = 4096  # bound for the driver-held centroid table
 # under both, the Lloyd iterations run locally over one Arrow collect
 # instead of paying (1 + iterations) scheduled jobs — the clustering tail
 # is job-count-bound at bench scale. The FINAL assignment stays
-# distributed either way (its output is corpus-sized).
+# distributed either way (its output is corpus-sized). The probe runs
+# before any width is known, so it admits vectors of at most
+# CELLS // VECS (128) dims.
 KMEANS_DRIVER_MAX_VECS = 131_072  # rows collected (limit bound+1 probe)
 KMEANS_DRIVER_MAX_CELLS = 16_777_216  # rows x dims cap (~128 MB int64)
 
@@ -139,7 +142,7 @@ def _vectors(batch: "pa.RecordBatch", dims: int) -> "np.ndarray":
     x = int64_matrix(batch.column("eq"), dims)
     if x is None:
         raise ValueError(
-            f"kmeans_fit: NULL or ragged embedding (every vector must hold "
+            f"pq_fit: NULL or ragged embedding (every vector must hold "
             f"{dims} non-NULL elements)"
         )
     return x
@@ -153,87 +156,150 @@ def kmeans_fit(
 ) -> tuple[DataFrame, list[list[int]]]:
     """kmeans_assign plus the fitted CODEBOOK: returns (assignments,
     final centroids) where centroids[cid] is the k x d integer table the
-    final assignment ran against — the piece product-quantization search
-    (ann_topk_pq_adc) needs to build its asymmetric-distance lookup.
+    final assignment ran against. The single-subspace case of
+    :func:`pq_fit`, which holds the one Lloyd loop and its driver and
+    distributed paths."""
+    codes, books = pq_fit(embeddings, 1, k, iterations, vec_col)
+    return (
+        codes.select(
+            "vec_id",
+            F.col("c0").alias("cluster_id"),
+            F.col("recon_err").alias("dist2"),
+        ),
+        books[0] if books else [],
+    )
 
-    Corpora under the KMEANS_DRIVER_* bounds (staging.bounded_int64)
-    iterate on the driver; larger ones, and NULL or ragged embeddings,
-    take the distributed pass, which fails loudly on the latter."""
+
+def pq_fit(
+    embeddings: DataFrame,
+    m: int,
+    k: int,
+    iterations: int,
+    vec_col: str = "embedding",
+) -> tuple[DataFrame, list[list[list[int]]]]:
+    """Product-quantization fit (Jegou, Douze & Schmid, TPAMI 2011): split
+    every vector into ``m`` equal subspaces (dims ``s*d .. (s+1)*d - 1``,
+    the ``F.slice`` windows) and run the deterministic Lloyd's above on
+    all of them at once, each codebook seeded with the k smallest vec_ids.
+    Returns (codes, codebooks): codes is ``(vec_id, c0..c{m-1},
+    recon_err)`` — each vector's nearest codeword per subspace under the
+    final codebooks and the exact int64 sum of the m squared distances —
+    and ``codebooks[s][cid]`` is subspace s's centroid. Bit-identical to m
+    independent kmeans_fit calls on the sliced subvectors (tested), but
+    one fit: the subspaces share the seeds, each iteration's pass and the
+    final pass, so no per-subspace job chain and no vec_id joins.
+
+    Corpora of at most KMEANS_DRIVER_MAX_VECS vectors of at most
+    KMEANS_DRIVER_MAX_CELLS // KMEANS_DRIVER_MAX_VECS dims iterate on the
+    driver from ONE staging.bounded_int64 probe, which also yields the
+    seeds; larger ones, and NULL or ragged embeddings, take the
+    distributed path — one seed job, then one partial-sums pass per
+    iteration covering every subspace — which fails loudly on the
+    latter. The final encoding pass is distributed on both paths (its
+    output is corpus-sized)."""
     q = _quantized(embeddings, vec_col).localCheckpoint(eager=False)
 
-    seeds = bounded_collect(
-        q.orderBy("vec_id").limit(k), k, "kmeans seed centroids"
+    # a vector wider than the cap probes as NULL, so the probe holds at
+    # most KMEANS_DRIVER_MAX_CELLS values before any width is known
+    cap = KMEANS_DRIVER_MAX_CELLS // max(KMEANS_DRIVER_MAX_VECS, 1)
+    local = bounded_int64(
+        q.select("vec_id", F.when(F.size("eq") <= cap, F.col("eq")).alias("eq")),
+        ["vec_id", "eq"],
+        KMEANS_DRIVER_MAX_VECS,
     )
-    centroids = [list(r.eq) for r in seeds]
-    if not centroids:
+    if local is not None:
+        vec_ids, vecs = local
+        seeds = vecs[np.argsort(vec_ids, kind="stable")[:k]]
+    else:
+        rows = bounded_collect(
+            q.orderBy("vec_id").limit(k), k, "kmeans seed centroids"
+        )
+        seeds = np.asarray([list(r.eq) for r in rows], dtype=np.int64)
+    codes = [f"c{s}" for s in range(m)]
+    if not len(seeds):
         # 0-row corpus: no seeds, no clusters — empty result, same schema
         return (
             q.select(
                 "vec_id",
-                F.lit(None).cast("bigint").alias("cluster_id"),
-                F.lit(None).cast("bigint").alias("dist2"),
+                *[F.lit(None).cast("bigint").alias(c) for c in codes + ["recon_err"]],
             ),
             [],
         )
     # fewer vectors than k: every vector seeds its own cluster — the SQL
     # twin's LIMIT k yields the same truncation, so semantics stay shared
-    k = min(k, len(centroids))
-    dims = len(centroids[0])
-    assert dims <= MAX_KMEANS_DIMS
+    k, dims = seeds.shape
+    if dims % m:
+        raise ValueError(f"pq_fit: {dims} dims do not split into {m} subspaces")
+    if dims > MAX_KMEANS_DIMS:
+        raise ValueError(f"pq_fit: {dims} dims exceed MAX_KMEANS_DIMS")
+    d = dims // m
+    # books[s] is subspace s's k x d codebook
+    books = seeds.reshape(k, m, d).transpose(1, 0, 2).copy()
 
-    cents = np.asarray(centroids, dtype=np.int64)
+    def sub(x, s):
+        return x[:, s * d : (s + 1) * d]
 
-    local = bounded_int64(
-        q, ["eq"], min(KMEANS_DRIVER_MAX_VECS, KMEANS_DRIVER_MAX_CELLS // max(dims, 1))
-    )
-
-    # Fused update pass: each batch emits its own per-(cluster, dim)
-    # partial sums directly from the Python worker — the d-wide eq column
-    # never crosses back out of Python; the shuffle carries <= batches *
-    # k * d tiny rows. Per-batch sums stay in int64 trivially. Reads the
-    # current iteration's ``cents``, which stay fixed until its collect.
+    # Fused update pass: each batch emits its own per-(subspace, cluster,
+    # dim) partial sums directly from the Python worker — the d-wide eq
+    # column never crosses back out of Python; the shuffle carries <=
+    # batches * k * dims tiny rows. Per-batch sums stay in int64
+    # trivially. Reads the current iteration's ``books``, which stay
+    # fixed until its collect.
     def partials(batches):
         for batch in batches:
-            if batch.num_rows:
-                ids, sums, counts = _cluster_sums(cents, _vectors(batch, dims))
-                i = np.tile(np.arange(dims, dtype=np.int32), len(ids))
+            if not batch.num_rows:
+                continue
+            x = _vectors(batch, dims)
+            for s in range(m):
+                ids, sums, counts = _cluster_sums(books[s], sub(x, s))
                 yield pa.RecordBatch.from_arrays(
-                    [np.repeat(ids, dims), i, sums.ravel(), np.repeat(counts, dims)],
-                    names=["cluster_id", "i", "s", "n"],
+                    [
+                        np.full(len(ids) * d, s, dtype=np.int32),
+                        np.repeat(ids, d),
+                        np.tile(np.arange(d, dtype=np.int32), len(ids)),
+                        sums.ravel(),
+                        np.repeat(counts, d),
+                    ],
+                    names=["sub", "cluster_id", "i", "s", "n"],
                 )
 
     for _ in range(iterations):
         # exact integer means (values are non-negative by the offset, so
         # floor-div == truncating div on every engine); an empty cluster
         # keeps its centroid
-        nxt = cents.copy()
+        nxt = books.copy()
         if local is not None:
-            ids, sums, counts = _cluster_sums(cents, local[0])
-            nxt[ids] = sums // counts[:, None]
+            for s in range(m):
+                ids, sums, counts = _cluster_sums(books[s], sub(vecs, s))
+                nxt[s, ids] = sums // counts[:, None]
         else:
             for r in bounded_collect(
-                q.mapInArrow(partials, "cluster_id bigint, i int, s bigint, n bigint")
-                .groupBy("cluster_id", "i")
+                q.mapInArrow(
+                    partials, "sub int, cluster_id bigint, i int, s bigint, n bigint"
+                )
+                .groupBy("sub", "cluster_id", "i")
                 .agg(F.sum("s").alias("s"), F.sum("n").alias("n")),
                 k * dims,
                 "kmeans centroid sums",
             ):
-                nxt[r.cluster_id, r.i] = r.s // r.n
-        cents = nxt
+                nxt[r.sub, r.cluster_id, r.i] = r.s // r.n
+        books = nxt
 
-    # Final assignment: emits only (vec_id, cluster_id, dist2) —
-    # mapInArrow is opaque to column pruning, so the pass must not ship
-    # the d-wide eq back out of the Python workers only for a select to
-    # drop it.
-    def final_assign(batches):
+    # Final encoding: emits only (vec_id, codes, recon_err) — mapInArrow
+    # is opaque to column pruning, so the pass must not ship the d-wide
+    # eq back out of the Python workers only for a select to drop it.
+    def encode(batches):
         for batch in batches:
-            best_c, best_d = _assign(cents, _vectors(batch, dims))
+            x = _vectors(batch, dims)
+            cols, err = [], np.zeros(batch.num_rows, dtype=np.int64)
+            for s in range(m):
+                best_c, best_d = _assign(books[s], sub(x, s))
+                cols.append(best_c)
+                err += best_d
             yield pa.RecordBatch.from_arrays(
-                [batch.column("vec_id").cast(pa.int64()), best_c, best_d],
-                names=["vec_id", "cluster_id", "dist2"],
+                [batch.column("vec_id").cast(pa.int64()), *cols, err],
+                names=["vec_id", *codes, "recon_err"],
             )
 
-    return (
-        q.mapInArrow(final_assign, "vec_id bigint, cluster_id bigint, dist2 bigint"),
-        cents.tolist(),
-    )
+    schema = ", ".join(f"{c} bigint" for c in ["vec_id", *codes, "recon_err"])
+    return q.mapInArrow(encode, schema), books.tolist()

@@ -28,6 +28,8 @@ lineage (documented knob: `checkpoint_every`).
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -113,6 +115,70 @@ def propagate_mass(
 # joins fall back to sort-merge (see the function docstring).
 TRIANGLES_BROADCAST_MAX_EDGES = 4_000_000
 
+# Driver-path bound for count_triangles (staging.bounded_int64 decides):
+# at or under this many edge rows the wedges close in NumPy on the
+# driver instead of through ~15 Spark jobs of degree joins, adjacency
+# packing and array intersection. Driver memory is O(edges + block):
+# at the bound, ~300 MB of Python driver RSS and ~7 s of NumPy on a
+# 4-vCPU VM; sf0.1's 1.196M edges take ~7 s end to end there, against
+# 17-20 s for the distributed path on local[2].
+TRIANGLES_DRIVER_MAX_EDGES = 2_000_000
+# Wedges closed per NumPy block on the driver path.
+TRIANGLES_DRIVER_BLOCK = 1 << 20
+
+
+def _count_triangles_driver(u, v):
+    """Driver-side twin of the distributed count over int64 endpoint
+    arrays, or ``None`` when the edge list breaks the contract (a
+    self-loop or a repeated pair), so the caller runs the distributed
+    path and both paths agree on such input.
+
+    Same orientation, by (degree, id): nodes are relabelled by their
+    rank in that order, and each edge points from its lower-ranked
+    endpoint s to the higher t. The out-adjacency is one sorted array of
+    packed ``s * n + t`` keys, so N+(s) is a contiguous, rank-sorted run.
+    A triangle r0 < r1 < r2 is the one wedge (r0 -> r1, r0 -> r2) with
+    r1 before r2 in N+(r0) that the key ``r1 * n + r2`` closes; wedges
+    are enumerated per edge in blocks of about TRIANGLES_DRIVER_BLOCK
+    and closed with one ``searchsorted`` each. Returns (node ids,
+    triangle counts) for the nodes in at least one triangle."""
+    ids, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
+    n, m = len(ids), len(u)
+    # ids are sorted, so a stable sort by degree orders by (degree, id)
+    order = np.argsort(np.bincount(inv, minlength=n), kind="stable")
+    rank = np.empty(n, dtype=np.int64)
+    rank[order] = np.arange(n)
+    ru, rv = rank[inv[:m]], rank[inv[m:]]
+    s, t = np.minimum(ru, rv), np.maximum(ru, rv)
+    keys = np.sort(s * n + t)
+    if (s == t).any() or (keys[1:] == keys[:-1]).any():
+        return None
+    s, t = keys // n, keys % n
+    # wedge partners of edge e are the later edges of the same run
+    run_end = np.searchsorted(s, s, side="right")
+    n_wedges = run_end - np.arange(m) - 1
+    ends = np.cumsum(n_wedges)
+    tri = np.zeros(n, dtype=np.int64)
+    lo = 0
+    while lo < m:
+        base = ends[lo - 1] if lo else 0
+        hi = max(int(np.searchsorted(ends, base + TRIANGLES_DRIVER_BLOCK, "right")), lo + 1)
+        cnt = n_wedges[lo:hi]
+        e = np.repeat(np.arange(lo, hi), cnt)
+        # partner index: e + 1, e + 2, ... within each edge's wedges
+        off = np.arange(len(e)) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+        w = t[e + 1 + off]
+        q = t[e] * n + w
+        pos = np.searchsorted(keys, q)
+        hit = keys[np.minimum(pos, m - 1)] == q
+        e = e[hit]
+        tri += np.bincount(s[e], minlength=n)
+        tri += np.bincount(t[e], minlength=n)
+        tri += np.bincount(w[hit], minlength=n)
+        lo = hi
+    nz = np.flatnonzero(tri)
+    return ids[order[nz]], tri[nz]
+
 
 def count_triangles(
     edges: DataFrame,
@@ -165,9 +231,32 @@ def count_triangles(
     hash against a broadcast and the edge list never shuffles; past it
     the two joins fall back to sort-merge on s / t — broadcasting an
     edge-sized relation at true graph scale is exactly the non-scalable
-    shape the guard exists to prevent (the _probe_ids pattern)."""
+    shape the guard exists to prevent (the _probe_ids pattern).
+
+    Driver path: the edge list is checkpointed, then probed by
+    staging.bounded_int64. Graphs of at most TRIANGLES_DRIVER_MAX_EDGES
+    integral, non-NULL edges with no self-loop or repeated pair are
+    counted in NumPy by :func:`_count_triangles_driver` — the same
+    orientation, wedges closed in fixed-size blocks — and return through
+    ``createDataFrame``, like k_core_layers' driver peel: 4 Spark jobs
+    instead of ~15 at bench scale, identical rows (tested). Everything
+    else runs the distributed form above on the same checkpoint, so the
+    upstream edge plan runs once either way."""
+    # checkpoint FIRST, then probe (the connected_components order): the
+    # upstream edge plan runs once whichever path follows. Lazy: the
+    # probe's job computes the checkpoint's partitions and persists them
+    # (Spark fills in any partition the limit did not reach).
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    e = e.localCheckpoint(eager=True)
+    e = e.localCheckpoint(eager=False)
+    local = bounded_int64(e, ["u", "v"], TRIANGLES_DRIVER_MAX_EDGES)
+    found = _count_triangles_driver(*local) if local is not None else None
+    if found is not None:
+        # node takes the common type of u and v, as on the distributed path
+        t = e.select("u").unionAll(e.select("v")).schema[0].dataType
+        return e.sparkSession.createDataFrame(
+            pd.DataFrame({"node": found[0], "n_triangles": found[1]}),
+            f"node {t.simpleString()}, n_triangles bigint",
+        )
     deg = (
         e.select(F.col("u").alias("node"))
         .unionAll(e.select(F.col("v").alias("node")))
@@ -344,9 +433,6 @@ def _k_core_layers_driver(spark, u, v, k: int, max_rounds: int) -> DataFrame:
     update by subtracting each newly-dead edge's endpoint counts, which
     is exactly the alive-adjacency degree the distributed form
     recomputes. Integer math throughout, so there is no drift channel."""
-    import numpy as np
-    import pandas as pd
-
     ids = np.unique(np.concatenate([u, v])) if len(u) else np.empty(0, np.int64)
     n = len(ids)
     ui = np.searchsorted(ids, u)

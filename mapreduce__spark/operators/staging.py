@@ -20,7 +20,8 @@ Both shapes truncate lineage and are value-identical
 (tests/test_staging.py pins equality at sf0.001).
 
 The driver-or-distributed seam lives here too: :func:`bounded_int64`
-decides for connected_components, k_core_layers and kmeans_fit.
+decides for connected_components, k_core_layers, count_triangles and
+pq_fit (which kmeans_fit is the one-subspace case of).
 """
 
 from __future__ import annotations

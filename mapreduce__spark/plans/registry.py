@@ -168,10 +168,16 @@ DRIVER_WINDOW: tuple[str, ...] = (
     "training_data_pipeline",
     "pii_scrub",
     "dedup_embedding_cosine",
-    "dedup_clusters",
-    "ann_topk_bruteforce",
-    "embedding_correlation",
     "graph_mass_propagation",
+    # changed code re-attesting (CHANGED_CODE_REATTEST): graph_triangles
+    # gained a NumPy driver path, and embedding_pq_codes /
+    # ann_topk_pq_adc now fit every codebook in one pq_fit; each
+    # displaced the newest-last-green filler (r4 group, reverse
+    # registration order): embedding_correlation, ann_topk_bruteforce,
+    # dedup_clusters
+    "graph_triangles",
+    "embedding_pq_codes",
+    "ann_topk_pq_adc",
     # (fillers displaced newest-last-green-first, r6 group in reverse
     # registration order: vocab_encode gave its slot to
     # perplexity_buckets, bpe_pair_counts to repetition_scrub,

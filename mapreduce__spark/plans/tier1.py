@@ -1933,9 +1933,10 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     finds each triangle exactly once at its (degree,id)-lowest vertex —
     see operators/graph.py count_triangles for the O(m^{3/2}) work
     bound, the O(sqrt(m)) out-degree bound that makes the round-11
-    adjacency-array + array_intersect execution safe per-row, and the
+    adjacency-array + array_intersect execution safe per-row, the
     measured A/B vs the former wedge-join form (warm 29.4s -> 10.4s at
-    sf0.1). The oracle unrolls the equivalent wedge-join orientation in
+    sf0.1), and the NumPy driver path that counts graphs of up to
+    TRIANGLES_DRIVER_MAX_EDGES edges (sf0.1's 1.196M included). The oracle unrolls the equivalent wedge-join orientation in
     SQL — exact integer counts, no /3 correction to drift."""
     from mapreduce__spark.operators.graph import count_triangles
 

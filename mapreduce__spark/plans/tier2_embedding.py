@@ -252,6 +252,14 @@ def _pq_oracle() -> str:
     """
 
 
+def _pq_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The embeddings cut to the PQ_M * PQ_SUBDIMS dims the codebooks
+    cover (the oracle's subspace windows)."""
+    return load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.slice("embedding", 1, PQ_M * PQ_SUBDIMS).alias("embedding")
+    )
+
+
 @query(
     "embedding_pq_codes",
     oracle=_pq_oracle(),
@@ -263,12 +271,12 @@ def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding-compression workhorse behind billion-scale ANN indexes:
     split each vector into PQ_M subspaces, learn a PQ_K-codeword
     codebook per subspace with the SAME deterministic integer k-means
-    the clustering family rides (kmeans_assign over F.slice'd
-    subvectors — quantized micro-units, exact int64 distances,
-    struct-min tie-breaks), and emit each vector's code tuple plus the
-    exact integer reconstruction error (sum of per-subspace squared
-    distances to the chosen codewords). 64 floats compress to PQ_M
-    bytes; asymmetric distance scans against the code table are then
+    the clustering family rides (operators/clustering.pq_fit, one
+    Lloyd's loop over all PQ_M F.slice windows — quantized micro-units,
+    exact int64 distances, struct-min tie-breaks), and emit each
+    vector's code tuple plus the exact integer reconstruction error
+    (sum of per-subspace squared distances to the chosen codewords).
+    64 floats compress to PQ_M bytes; asymmetric distance scans against the code table are then
     table lookups. Fully oracle-checked: the twin runs one unrolled
     Lloyd's chain per subspace on the same 1-based dim windows and
     joins them on vec_id — codes AND reconstruction error are
@@ -276,33 +284,15 @@ def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the multi-codebook case.
 
     SCALE: codebooks are PQ_M broadcast-sized (k x d/M) tables learned
-    by the centroid-broadcast k-means (one scan + one bounded shuffle
-    per iteration per subspace); encoding is scan-stage codegen; the
-    corpus never shuffles. At 100 TB the code table (PQ_M bytes/vector)
-    is what ships to the ANN index, not the vectors."""
-    from mapreduce__spark.operators.clustering import kmeans_assign
+    by the centroid-broadcast k-means — a driver fit from one bounded
+    probe under the k-means bounds, else one scan + one bounded shuffle
+    per iteration covering every subspace; encoding is one Arrow pass
+    emitting all PQ_M codes; the corpus never shuffles. At 100 TB the
+    code table (PQ_M bytes/vector) is what ships to the ANN index, not
+    the vectors."""
+    from mapreduce__spark.operators.clustering import pq_fit
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    out = None
-    for m in range(PQ_M):
-        sub = emb.select(
-            "vec_id",
-            F.slice("embedding", 1 + m * PQ_SUBDIMS, PQ_SUBDIMS).alias(
-                "embedding"
-            ),
-        )
-        a = kmeans_assign(sub, PQ_K, PQ_ITERS).select(
-            "vec_id",
-            F.col("cluster_id").alias(f"c{m}"),
-            F.col("dist2").alias(f"_e{m}"),
-        )
-        out = a if out is None else out.join(a, "vec_id")
-    err = sum(F.col(f"_e{m}") for m in range(1, PQ_M)) + F.col("_e0")
-    return out.select(
-        "vec_id",
-        *[f"c{m}" for m in range(PQ_M)],
-        err.cast("bigint").alias("recon_err"),
-    )
+    return pq_fit(_pq_embeddings(spark, sf_dir), PQ_M, PQ_K, PQ_ITERS)[0]
 
 
 PQ_NQ = 5       # ADC query vectors (vec_ids 0..4, the bruteforce set)
@@ -388,8 +378,9 @@ def ann_topk_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     PQ_M x PQ_K integer lookup table, built DRIVER-SIDE from the fitted
     codebooks — k*d ints, no corpus access), and each database vector's
     asymmetric distance is then PQ_M table lookups + adds over its code
-    tuple, evaluated scan-stage via element_at on broadcast-literal
-    lookup arrays. Declared semantics is PQ-ADC itself (like
+    tuple, evaluated scan-stage via element_at on literal lookup arrays
+    — all PQ_NQ queries explode against each code row, so the code
+    table is read once. Declared semantics is PQ-ADC itself (like
     ann_topk_buckets' declared bucketing), so the oracle is EXACT: the
     twin re-derives codes and codebooks with unrolled Lloyd's chains per
     subspace and ranks by the same integer ADC with the same
@@ -405,26 +396,14 @@ def ann_topk_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     with partial top-k per partition via the rank window; at 100 TB the
     codes for 10^9 vectors are ~4 GB, the part that stays hot while raw
     embeddings stay cold."""
-    from mapreduce__spark.operators.clustering import kmeans_fit
+    import numpy as np
+
+    from mapreduce__spark.operators.clustering import _quantized, pq_fit
     from mapreduce__spark.operators.staging import bounded_collect
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    codes = None
-    books: list[list[list[int]]] = []
-    for m in range(PQ_M):
-        sub = emb.select(
-            "vec_id",
-            F.slice("embedding", 1 + m * PQ_SUBDIMS, PQ_SUBDIMS).alias(
-                "embedding"
-            ),
-        )
-        a, cents = kmeans_fit(sub, PQ_K, PQ_ITERS)
-        books.append(cents)
-        a = a.select("vec_id", F.col("cluster_id").alias(f"c{m}"))
-        codes = a if codes is None else codes.join(a, "vec_id")
-    # per-query subvectors, quantized exactly like the codebooks were
-    from mapreduce__spark.operators.clustering import _quantized
-
+    emb = _pq_embeddings(spark, sf_dir)
+    codes, books = pq_fit(emb, PQ_M, PQ_K, PQ_ITERS)
+    # per-query vectors, quantized exactly like the codebooks were
     qrows = bounded_collect(
         _quantized(emb.where(F.col("vec_id") < PQ_NQ), "embedding").orderBy(
             "vec_id"
@@ -438,38 +417,38 @@ def ann_topk_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
             [],
             "query_id bigint, neighbor_id bigint, adc bigint, rank bigint",
         )
-    per_query = []
-    for r in qrows:
-        qeq = list(r.eq)
-        # the ADC lookup table: dist from this query's m-th subvector to
-        # every codeword of codebook m — PQ_M * PQ_K ints on the driver
-        luts = [
-            [
-                sum(
-                    (qeq[m * PQ_SUBDIMS + i] - books[m][cid][i]) ** 2
-                    for i in range(PQ_SUBDIMS)
+    # the ADC lookup tables, PQ_NQ x PQ_M x k ints on the driver:
+    # luts[q, m, cid] is the exact distance from query q's m-th
+    # subvector to codeword cid of codebook m
+    cb = np.asarray(books, dtype=np.int64)
+    k = cb.shape[1]
+    qv = np.asarray([r.eq for r in qrows], dtype=np.int64)
+    luts = ((qv.reshape(len(qrows), PQ_M, 1, PQ_SUBDIMS) - cb) ** 2).sum(axis=-1)
+    # every code row meets every query in ONE pass over the code table:
+    # the queries ride along as a literal array of (id, flattened lut)
+    q = F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(int(r.vec_id)).cast("bigint").alias("id"),
+                    F.lit(lut.ravel().tolist()).cast("array<bigint>").alias("lut"),
                 )
-                for cid in range(len(books[m]))
+                for r, lut in zip(qrows, luts)
             ]
-            for m in range(PQ_M)
-        ]
-        adc = None
-        for m in range(PQ_M):
-            term = F.element_at(
-                F.lit(luts[m]).cast("array<bigint>"),
-                (F.col(f"c{m}") + 1).cast("int"),
-            )
-            adc = term if adc is None else adc + term
-        per_query.append(
-            codes.where(F.col("vec_id") != int(r.vec_id)).select(
-                F.lit(int(r.vec_id)).cast("bigint").alias("query_id"),
-                F.col("vec_id").alias("neighbor_id"),
-                adc.cast("bigint").alias("adc"),
-            )
         )
-    scored = per_query[0]
-    for df in per_query[1:]:
-        scored = scored.unionAll(df)
+    ).alias("q")
+    adc = F.element_at("q.lut", (F.col("c0") + 1).cast("int"))
+    for m in range(1, PQ_M):
+        adc = adc + F.element_at("q.lut", (F.col(f"c{m}") + 1 + m * k).cast("int"))
+    scored = (
+        codes.select("*", q)
+        .where(F.col("q.id") != F.col("vec_id"))
+        .select(
+            F.col("q.id").alias("query_id"),
+            F.col("vec_id").alias("neighbor_id"),
+            adc.cast("bigint").alias("adc"),
+        )
+    )
     w = Window.partitionBy("query_id").orderBy("adc", "neighbor_id")
     return (
         scored.withColumn(

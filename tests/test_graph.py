@@ -133,6 +133,7 @@ def test_driver_path_widens_mixed_key_types(spark):
 
 
 from itertools import combinations
+from unittest import mock
 
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
@@ -141,8 +142,18 @@ from mapreduce__spark.operators.graph import count_triangles
 
 
 def tri_dict(spark, edges):
+    """Per-node counts, run on both paths — the NumPy driver path under
+    TRIANGLES_DRIVER_MAX_EDGES and the distributed one forced by a zero
+    bound — which must agree."""
     df = spark.createDataFrame(edges, "u bigint, v bigint")
-    return {r.node: r.n_triangles for r in count_triangles(df).collect()}
+
+    def run(bound):
+        with mock.patch.object(graph, "TRIANGLES_DRIVER_MAX_EDGES", bound):
+            return {r.node: r.n_triangles for r in count_triangles(df).collect()}
+
+    fast = run(10**6)
+    assert fast == run(0)
+    return fast
 
 
 def brute_triangles(edges):
@@ -204,6 +215,39 @@ def test_triangles_match_bruteforce(spark, edges):
     """Property: on random <=8-node graphs the degree-oriented count
     equals brute-force triple enumeration, per node."""
     assert tri_dict(spark, sorted(edges)) == brute_triangles(edges)
+
+
+@given(
+    st.sets(
+        st.tuples(st.integers(0, 11), st.integers(0, 11)).filter(
+            lambda e: e[0] != e[1]
+        ),
+        max_size=30,
+    )
+)
+@example(set())  # empty graph
+@example({(0, 1), (1, 2), (2, 0), (2, None)})  # NULL endpoint
+@example({(0, 1), (1, 2), (2, 0), (2, 2)})  # self-loop
+@example({(0, 1), (1, 2), (2, 0), (1, 0), (2, 3)})  # repeated pair
+@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
+def test_triangles_driver_path_matches_distributed(spark, edges):
+    """The TRIANGLES_DRIVER_MAX_EDGES fast path is a pure materialization
+    choice: on random graphs (any orientation) the NumPy wedge closure
+    and the distributed array intersection return identical rows. Input
+    outside the contract — a NULL endpoint, a self-loop, a pair listed
+    twice — takes the distributed path, so both agree on it too."""
+    df = spark.createDataFrame(sorted(edges, key=str), "u bigint, v bigint")
+
+    def rows(bound, block=graph.TRIANGLES_DRIVER_BLOCK):
+        with mock.patch.object(graph, "TRIANGLES_DRIVER_MAX_EDGES", bound), \
+                mock.patch.object(graph, "TRIANGLES_DRIVER_BLOCK", block):
+            return sorted(tuple(r) for r in count_triangles(df).collect())
+
+    fast = rows(10**6)
+    # a 3-wedge block splits the closure into many blocks, some of them
+    # a single edge with more wedges than the block holds
+    assert fast == rows(10**6, block=3) == rows(0)
+    assert all(node is not None and node != -(2**63) for node, _ in fast)
 
 
 @given(

@@ -349,15 +349,19 @@ def test_snapshot_diff_single_full_outer_smj(spark, sf_small):
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
-def test_graph_triangles_joins_are_equi(spark, sf_small):
+def test_graph_triangles_joins_are_equi(spark, sf_small, monkeypatch):
     """Both the wedge join and the triangle-closing join must plan as
     equi-joins (the canonical pair ordering makes the closure an
     equality probe) — a BroadcastNestedLoopJoin or cartesian here is
     the OR-form closure that measured minutes-vs-seconds even at
-    sf0.01."""
+    sf0.01. A zero TRIANGLES_DRIVER_MAX_EDGES forces the distributed
+    plan; the driver path would return a LocalTableScan."""
+    from mapreduce__spark.operators import graph
     from mapreduce__spark.plans.tier1 import graph_triangles
 
+    monkeypatch.setattr(graph, "TRIANGLES_DRIVER_MAX_EDGES", 0)
     plan = physical(graph_triangles(spark, sf_small))
+    assert "SortMergeJoin" in plan or "BroadcastHashJoin" in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
 

@@ -54,6 +54,12 @@ CHANGED_CODE_REATTEST: set[str] = {
     # filler, so the least-recently-attested filler invariant keeps
     # binding as round-14 additions pop into the r4 filler group.
     "graph_mass_propagation",
+    # graph_triangles (NumPy driver path) and embedding_pq_codes /
+    # ann_topk_pq_adc (one pq_fit for every codebook) changed after
+    # 4 / 3 / 3 green rows; each displaced one filler below
+    "graph_triangles",
+    "embedding_pq_codes",
+    "ann_topk_pq_adc",
 }
 
 # Saturation retirement (round-10 VERDICT item 8): a query holding
@@ -85,9 +91,6 @@ TRIPLE_FILLERS: set[str] = {
     "training_data_pipeline",
     "pii_scrub",
     "dedup_embedding_cosine",
-    "dedup_clusters",
-    "ann_topk_bruteforce",
-    "embedding_correlation",
 }
 _DISPLACEMENT_LOG = {
     # (round-14 additions pop the newest-last-green filler first — the
@@ -107,8 +110,11 @@ _DISPLACEMENT_LOG = {
     # media_header_metadata (by matryoshka_overlap),
     # image_header_metadata (by lang_id_confusion —
     # graph_mass_propagation holds its seat via CHANGED_CODE_REATTEST,
-    # not as a filler), then the rest of the r4 group from
-    # embedding_correlation, then the r3 group ending at
+    # not as a filler), then the r4 group from embedding_correlation
+    # (by graph_triangles), ann_topk_bruteforce (by embedding_pq_codes)
+    # and dedup_clusters (by ann_topk_pq_adc) — these three re-attest
+    # via CHANGED_CODE_REATTEST — then the rest of the r4 group from
+    # dedup_embedding_cosine, then the r3 group ending at
     # scalar_functions.)
 }
 

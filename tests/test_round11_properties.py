@@ -327,77 +327,6 @@ def test_targz_gzip_layer_rejections():
     expect("gzip header CRC16 mismatch", m)
 
 
-# ---------------------------------------------------------------------------
-# Product quantization + ADC search (embedding_pq_codes / ann_topk_pq_adc).
-# ---------------------------------------------------------------------------
-
-
-def test_pq_adc_equals_distance_to_reconstruction(spark, sf_oracle):
-    """The defining PQ identity: the asymmetric distance the search
-    ranks by equals the EXACT integer distance from the query vector to
-    the neighbor's reconstruction (its codewords concatenated) — because
-    per-subspace squared distances add. Recomputed here in plain Python
-    from kmeans_fit's codebooks, independent of both the query plan and
-    the SQL twin."""
-    from pyspark.sql import functions as F
-
-    from mapreduce__spark.operators.clustering import _quantized, kmeans_fit
-    from mapreduce__spark.plans.tier0 import load_table
-    from mapreduce__spark.plans.tier2 import (
-        PQ_ITERS,
-        PQ_K,
-        PQ_M,
-        PQ_NQ,
-        PQ_SUBDIMS,
-        ann_topk_pq_adc,
-    )
-
-    emb = load_table(spark, sf_oracle, "embeddings")
-    eqs = {
-        int(r.vec_id): list(r.eq)
-        for r in _quantized(emb, "embedding").collect()
-    }
-    books, codes = [], {}
-    for m in range(PQ_M):
-        sub = emb.select(
-            "vec_id",
-            F.slice("embedding", 1 + m * PQ_SUBDIMS, PQ_SUBDIMS).alias(
-                "embedding"
-            ),
-        )
-        a, cents = kmeans_fit(sub, PQ_K, PQ_ITERS)
-        books.append(cents)
-        for r in a.collect():
-            codes.setdefault(int(r.vec_id), [0] * PQ_M)[m] = int(r.cluster_id)
-
-    def recon(vid):
-        return [
-            v
-            for m in range(PQ_M)
-            for v in books[m][codes[vid][m]]
-        ]
-
-    rows = ann_topk_pq_adc(spark, sf_oracle).collect()
-    assert len(rows) == PQ_NQ * 5
-    for r in rows:
-        q = eqs[int(r.query_id)]
-        rec = recon(int(r.neighbor_id))
-        want = sum((a - b) * (a - b) for a, b in zip(q, rec))
-        assert int(r.adc) == want, (r.query_id, r.neighbor_id)
-    # and the ranking is genuinely the min over ALL neighbors: rank-1
-    # beats every other vector's reconstruction distance
-    for r in rows:
-        if r.rank != 1:
-            continue
-        q = eqs[int(r.query_id)]
-        best = min(
-            sum((a - b) * (a - b) for a, b in zip(q, recon(v)))
-            for v in codes
-            if v != int(r.query_id)
-        )
-        assert int(r.adc) == best, r.query_id
-
-
 @st.composite
 def _warc_files(draw):
     """Random WARC files built independently of synth_warc_bytes: random
