@@ -36,7 +36,9 @@ the update is ONE map-side-combinable groupBy(subspace, cluster, dim)
 aggregate per iteration, for every product-quantization subspace at
 once. Per-iteration cost: one corpus scan + one k·d-key shuffle;
 nothing corpus-sized ever materializes or ships. Empty clusters keep
-their previous centroid (both engines).
+their previous centroid (both engines). Corpora under the
+KMEANS_DRIVER_* bounds skip the passes: one bounded probe brings the
+vectors to the driver, where the same NumPy step fits and encodes them.
 
 Reference provenance: the reference has no iterative operators
 (SURVEY §2b lists them under engine extensions); this is tier-2
@@ -47,6 +49,7 @@ document embeddings).
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -61,13 +64,13 @@ QUANT_SCALE = 1_000_000  # micro-units
 QUANT_OFFSET = 1 << 21  # shifts quantized values non-negative
 MAX_KMEANS_DIMS = 4096  # bound for the driver-held centroid table
 
-# Driver-path bounds for the FIT loop (staging.bounded_int64 decides):
-# under both, the Lloyd iterations run locally over one Arrow collect
-# instead of paying (1 + iterations) scheduled jobs — the clustering tail
-# is job-count-bound at bench scale. The FINAL assignment stays
-# distributed either way (its output is corpus-sized). The probe runs
-# before any width is known, so it admits vectors of at most
-# CELLS // VECS (128) dims.
+# Driver-path bounds (staging.bounded_int64 decides): under both, the
+# Lloyd iterations AND the final encoding run locally over one Arrow
+# collect instead of paying (1 + iterations) scheduled jobs plus a
+# Python-worker pass — the clustering tail is job-count-bound at bench
+# scale. The encoded output is then at most VECS rows x (m + 2) bigints
+# and returns through createDataFrame. The probe runs before any width
+# is known, so it admits vectors of at most CELLS // VECS (128) dims.
 KMEANS_DRIVER_MAX_VECS = 131_072  # rows collected (limit bound+1 probe)
 KMEANS_DRIVER_MAX_CELLS = 16_777_216  # rows x dims cap (~128 MB int64)
 
@@ -190,13 +193,15 @@ def pq_fit(
     final pass, so no per-subspace job chain and no vec_id joins.
 
     Corpora of at most KMEANS_DRIVER_MAX_VECS vectors of at most
-    KMEANS_DRIVER_MAX_CELLS // KMEANS_DRIVER_MAX_VECS dims iterate on the
+    KMEANS_DRIVER_MAX_CELLS // KMEANS_DRIVER_MAX_VECS dims run on the
     driver from ONE staging.bounded_int64 probe, which also yields the
-    seeds; larger ones, and NULL or ragged embeddings, take the
-    distributed path — one seed job, then one partial-sums pass per
-    iteration covering every subspace — which fails loudly on the
-    latter. The final encoding pass is distributed on both paths (its
-    output is corpus-sized)."""
+    seeds: the iterations and the final encoding both use the probe's
+    vectors, and the codes return through ``createDataFrame`` — the
+    probe is the fit's only Spark job. Larger corpora, and NULL or
+    ragged embeddings, take the distributed path — one seed job, one
+    partial-sums pass per iteration covering every subspace, and a
+    ``mapInArrow`` encoding pass — which fails loudly on the latter.
+    Both paths return the same rows and schema (tested)."""
     q = _quantized(embeddings, vec_col).localCheckpoint(eager=False)
 
     # a vector wider than the cap probes as NULL, so the probe holds at
@@ -285,21 +290,34 @@ def pq_fit(
                 nxt[r.sub, r.cluster_id, r.i] = r.s // r.n
         books = nxt
 
+    names = ["vec_id", *codes, "recon_err"]
+    schema = ", ".join(f"{c} bigint" for c in names)
+
+    def encoded(x):
+        """(codes per subspace, recon_err) of the rows of ``x`` under the
+        final codebooks."""
+        cols, err = [], np.zeros(len(x), dtype=np.int64)
+        for s in range(m):
+            best_c, best_d = _assign(books[s], sub(x, s))
+            cols.append(best_c)
+            err += best_d
+        return cols, err
+
+    if local is not None:
+        # the probe already holds every vector: encode on the driver
+        cols, err = encoded(vecs)
+        pdf = pd.DataFrame(dict(zip(names, [vec_ids, *cols, err])))
+        return q.sparkSession.createDataFrame(pdf, schema), books.tolist()
+
     # Final encoding: emits only (vec_id, codes, recon_err) — mapInArrow
     # is opaque to column pruning, so the pass must not ship the d-wide
     # eq back out of the Python workers only for a select to drop it.
     def encode(batches):
         for batch in batches:
-            x = _vectors(batch, dims)
-            cols, err = [], np.zeros(batch.num_rows, dtype=np.int64)
-            for s in range(m):
-                best_c, best_d = _assign(books[s], sub(x, s))
-                cols.append(best_c)
-                err += best_d
+            cols, err = encoded(_vectors(batch, dims))
             yield pa.RecordBatch.from_arrays(
                 [batch.column("vec_id").cast(pa.int64()), *cols, err],
-                names=["vec_id", *codes, "recon_err"],
+                names=names,
             )
 
-    schema = ", ".join(f"{c} bigint" for c in ["vec_id", *codes, "recon_err"])
     return q.mapInArrow(encode, schema), books.tolist()

@@ -1,11 +1,23 @@
-"""Graph analytics: integer mass propagation (PageRank push steps) and
-connected components — duplicate-pair graphs into duplicate CLUSTERS.
+"""Graph analytics over edge-list DataFrames: integer mass propagation
+(PageRank push steps), triangle counting, connected components and k-core
+peeling.
 
-Near-dup detection yields PAIRS; dedup policy needs CLUSTERS ("keep one
-representative per group of mutually-similar docs"), i.e. connected
-components of the similarity graph. Spark has no CC primitive; this is the
-iterative min-label-propagation algorithm (the alternating small-star /
-large-star idea in its simple form):
+Every operator here has two paths behind one seam,
+:func:`staging.bounded_int64`: an edge list of at most ``*_DRIVER_MAX_EDGES``
+integral, non-NULL rows comes back from one bounded Arrow probe as int64
+arrays and is solved in NumPy (or a union-find) on the driver; anything
+larger, or outside that contract, runs the distributed DataFrame
+algorithm. Both paths return the same rows and schema (property-tested
+against each other); the bounds are module constants, and tests force the
+distributed path by setting one to 0. At bench scale the operators are
+bound by Spark job scheduling, not compute, which is what the driver
+paths remove.
+
+Connected components: near-dup detection yields PAIRS; dedup policy
+needs CLUSTERS ("keep one representative per group of mutually-similar
+docs"), i.e. connected components of the similarity graph. Spark has no
+CC primitive; the distributed path is iterative min-label propagation
+(the alternating small-star / large-star idea in its simple form):
 
     label(v) := v
     repeat: label(v) := min(label(v), min over neighbors' labels)
@@ -20,10 +32,11 @@ exceeds `max_iter` fails LOUDLY rather than returning split labels. The
 driver loop only checks a scalar convergence count per round; labels
 never collect to the driver.
 
-Scale: edge table shuffles on node id each round; for N-node graphs of
-small components the work per round is O(E). A 100 TB corpus with billions
-of edges runs the same loop with checkpointing every few rounds to cut
-lineage (documented knob: `checkpoint_every`).
+Scale: the iterative distributed loops shuffle the edge table on node id
+each round; for N-node graphs of small components the work per round is
+O(E). A 100 TB corpus with billions of edges runs the same loops with
+checkpointing every few rounds to cut lineage (documented knob:
+`checkpoint_every`).
 """
 
 from __future__ import annotations
@@ -34,6 +47,39 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mapreduce__spark.operators.staging import bounded_int64
+
+
+# Driver-path bound for propagate_mass (staging.bounded_int64 decides):
+# at or under this many edge rows the supersteps run as NumPy segment
+# sums on the driver instead of one join + groupBy job chain per
+# superstep. Driver cost is a few int64 arrays per edge: at the bound,
+# k=4 on random ids took ~1 s and ~100 MB of NumPy on a 4-vCPU VM, the
+# same order as KCORE_/TRIANGLES_DRIVER_MAX_EDGES.
+MASS_DRIVER_MAX_EDGES = 2_000_000
+
+
+def _propagate_mass_driver(c, s, k: int, initial_mass: int):
+    """Driver-side twin of the superstep loop over int64 endpoint arrays:
+    returns (node ids, mass) of the side superstep k lands on. Each side
+    is relabelled by ``np.unique``; a superstep gives every sender's
+    ``mass // degree`` to the receivers of its edges, summed per receiver
+    in int64 by ``np.add.reduceat`` over the edges sorted by receiver —
+    exact, so any k agrees with the distributed path bit for bit. A
+    repeated (c, s) pair counts twice, as it does there."""
+    sides = [np.unique(x, return_inverse=True) for x in (c, s)]
+    ids = [u for u, _ in sides]
+    idx = [inv for _, inv in sides]
+    deg = [np.bincount(inv, minlength=len(u)) for u, inv in sides]
+    # edges grouped by receiver; every node has an edge, so each segment
+    # of the sorted order is non-empty and starts at the degree prefix sum
+    order = [np.argsort(inv) for inv in idx]
+    starts = [np.cumsum(d) - d for d in deg]
+    mass = np.full(len(ids[0]), initial_mass, dtype=np.int64)
+    for i in range(k):
+        src, dst = i % 2, 1 - i % 2
+        share = (mass // deg[src])[idx[src]]
+        mass = np.add.reduceat(share[order[dst]], starts[dst])
+    return ids[k % 2], mass
 
 
 def propagate_mass(
@@ -47,43 +93,60 @@ def propagate_mass(
     Every c-side node starts with ``initial_mass``; each superstep splits
     a node's mass by integer division across its edges and sums at the
     receivers, alternating direction (c→s, s→c, ...). Returns the mass
-    table keyed by ``c`` when k is even, ``s`` when odd.
+    table keyed by ``c`` when k is even, ``s`` when odd: the key typed
+    like that edge column, ``mass`` bigint, on either path.
 
     Integer mass ``//`` degree keeps the result order-independent (float
     summation order would make cross-engine bit-equality luck), so any k
     is exactly oracle-checkable by unrolled SQL.
 
-    Scale/loop discipline (restructured round 14 — the A/B measured a
-    28% sf0.1 win over the two-checkpoint form): the edge list is
-    materialized ONCE with both degree columns attached, computed by two
-    partitioned window counts in the same pass as the upstream edge
-    derivation, so there is exactly one eager localCheckpoint instead of
-    the former two (the old form checkpointed the raw edges so the two
-    groupBy-degree relations and their joins back wouldn't re-run the
-    upstream join, then checkpointed the joined result again). The first
-    superstep folds the uniform ``initial_mass`` as a literal into a
-    groupBy over ``e`` itself — every later superstep is one join
-    (static ``e`` ⋈ shrinking mass table) plus one partially-aggregated
-    groupBy, the Pregel message-passing shape. Skew note: a window count
-    co-locates each key's edges exactly like the sort-merge degree join
-    it replaces did, so the skew exposure is unchanged while two shuffle
-    stages and one checkpoint materialization disappear.
-    ``checkpoint_every`` truncates mass-table lineage the same way
-    :func:`connected_components` does; without it superstep i replays
-    supersteps 0..i-1 and the loop goes quadratic in k."""
+    Driver path: the edge list is checkpointed lazily, then probed by
+    staging.bounded_int64 (the count_triangles order — the probe's job
+    fills the checkpoint, so the upstream edge plan runs once on either
+    path). At most :data:`MASS_DRIVER_MAX_EDGES` integral, non-NULL
+    edges run all k supersteps in NumPy (:func:`_propagate_mass_driver`)
+    and return through ``createDataFrame``: the probe is the query's one
+    Spark job instead of a join + groupBy chain per superstep. Identical
+    rows and schema (tested against the loop below).
+
+    Distributed path (larger graphs, NULL or non-integral ids): the
+    checkpointed edge list gets both degree columns from two
+    partitioned window counts, checkpointed lazily so the first
+    superstep's job fills it. The first superstep folds the uniform
+    ``initial_mass`` as a literal into a groupBy over ``e`` itself —
+    every later superstep is one join (static ``e`` ⋈ shrinking mass
+    table) plus one partially-aggregated groupBy, the Pregel
+    message-passing shape. A window count co-locates each key's edges
+    exactly like a sort-merge degree join would, so the skew exposure
+    is that of the groupBy. ``checkpoint_every`` truncates mass-table
+    lineage the same way :func:`connected_components` does; without it
+    superstep i replays supersteps 0..i-1 and the loop goes quadratic in
+    k."""
     if k < 1:
         raise ValueError("propagate_mass: k must be >= 1")
+    if initial_mass < 0:
+        # both paths divide non-negative mass, where // and SQL `div`
+        # (truncation toward zero) agree
+        raise ValueError("propagate_mass: initial_mass must be >= 0")
     from pyspark.sql import Window
+    from pyspark.sql.types import LongType, StructField, StructType
 
-    # integer division with truncation toward zero on non-negative mass —
-    # identical semantics to DuckDB's `//` for the positive values here
     from mapreduce__spark.operators.windows import idiv
 
+    e0 = edges.select("c", "s").localCheckpoint(eager=False)
+    local = bounded_int64(e0, ["c", "s"], MASS_DRIVER_MAX_EDGES)
+    if local is not None:
+        key = "c" if k % 2 == 0 else "s"
+        node, mass = _propagate_mass_driver(*local, k, initial_mass)
+        return e0.sparkSession.createDataFrame(
+            pd.DataFrame({key: node, "mass": mass}),
+            StructType([e0.schema[key], StructField("mass", LongType())]),
+        )
+
     e = (
-        edges.select("c", "s")
-        .withColumn("dc", F.count(F.lit(1)).over(Window.partitionBy("c")))
+        e0.withColumn("dc", F.count(F.lit(1)).over(Window.partitionBy("c")))
         .withColumn("ds", F.count(F.lit(1)).over(Window.partitionBy("s")))
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
 
     mass = e.groupBy("s").agg(

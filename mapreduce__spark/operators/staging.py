@@ -20,8 +20,10 @@ Both shapes truncate lineage and are value-identical
 (tests/test_staging.py pins equality at sf0.001).
 
 The driver-or-distributed seam lives here too: :func:`bounded_int64`
-decides for connected_components, k_core_layers, count_triangles and
-pq_fit (which kmeans_fit is the one-subspace case of).
+decides for propagate_mass, connected_components, k_core_layers,
+count_triangles and pq_fit (which kmeans_fit is the one-subspace case
+of). Under its bound pq_fit fits AND encodes from the probe's arrays, so
+every kmeans_fit/pq_fit caller reads its vectors once.
 """
 
 from __future__ import annotations

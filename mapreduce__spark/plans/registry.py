@@ -166,18 +166,21 @@ DRIVER_WINDOW: tuple[str, ...] = (
     "kernel_search_count",
     "sequence_packing",
     "training_data_pipeline",
-    "pii_scrub",
-    "dedup_embedding_cosine",
     "graph_mass_propagation",
     # changed code re-attesting (CHANGED_CODE_REATTEST): graph_triangles
     # gained a NumPy driver path, and embedding_pq_codes /
     # ann_topk_pq_adc now fit every codebook in one pq_fit; each
     # displaced the newest-last-green filler (r4 group, reverse
     # registration order): embedding_correlation, ann_topk_bruteforce,
-    # dedup_clusters
+    # dedup_clusters. Then propagate_mass gained a NumPy driver path
+    # (graph_mass_propagation_k4) and pq_fit encodes on the driver
+    # under its bound (semantic_dedup, a kmeans_assign caller); they
+    # displaced dedup_embedding_cosine and pii_scrub, the same way
     "graph_triangles",
     "embedding_pq_codes",
     "ann_topk_pq_adc",
+    "graph_mass_propagation_k4",
+    "semantic_dedup",
     # (fillers displaced newest-last-green-first, r6 group in reverse
     # registration order: vocab_encode gave its slot to
     # perplexity_buckets, bpe_pair_counts to repetition_scrub,
@@ -197,7 +200,11 @@ DRIVER_WINDOW: tuple[str, ...] = (
     # graph_mass_propagation is SKIPPED in the pop order: its plan was
     # restructured this round (one-checkpoint window-degree form), so
     # its three green rows describe the old code and it must hold a
-    # seat for re-attestation)
+    # seat for re-attestation; then the r4 group in reverse
+    # registration order: embedding_correlation to graph_triangles,
+    # ann_topk_bruteforce to embedding_pq_codes, dedup_clusters to
+    # ann_topk_pq_adc, dedup_embedding_cosine to
+    # graph_mass_propagation_k4, and pii_scrub to semantic_dedup)
 )
 
 

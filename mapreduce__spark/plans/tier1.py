@@ -1821,11 +1821,15 @@ def graph_mass_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine hash would be luck; integer sums are order-independent
     and the div truncation is defined identically in both engines.
 
-    Scale shape: the degree-annotated edge list is checkpointed once,
-    the first superstep folds the uniform initial mass as a literal (no
-    join), and each later superstep is static edges ⋈ shrinking masses
-    (uniform keys) + one partial-agged groupBy — the Pregel
-    message-passing shape, with localCheckpoint lineage truncation every
+    Scale shape: the edge list is checkpointed once and probed under
+    MASS_DRIVER_MAX_EDGES; a graph under the bound (bench scale, sf0.1)
+    runs both supersteps as NumPy segment sums on the driver, so the
+    upstream join and the probe are the whole query's Spark work.
+    Larger graphs run the Pregel message-passing shape on the same
+    checkpoint: degree columns attached once, the first superstep folds
+    the uniform initial mass as a literal (no join), each later
+    superstep is static edges ⋈ shrinking masses (uniform keys) + one
+    partial-agged groupBy, with localCheckpoint lineage truncation every
     few supersteps (see operators/graph.py propagate_mass)."""
     from mapreduce__spark.operators.graph import propagate_mass
 
@@ -1870,14 +1874,18 @@ def graph_mass_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tier1", "graph"),
 )
 def graph_mass_propagation_k4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Four supersteps of the same integer mass propagation — the
-    k-parameterized Pregel loop (operators/graph.py propagate_mass) run
-    long enough to cross the lineage-truncation boundary: with
-    checkpoint_every=2 the loop localCheckpoints mid-run, so this query
-    attests the CHECKPOINTED iteration path, not just two unrolled
-    steps. The oracle unrolls all four supersteps in SQL with the same
-    integer algebra (order-independent sums, defined truncation), so the
-    iterative DataFrame loop is bit-exact-checkable at k=4."""
+    """Four supersteps of the same integer mass propagation
+    (operators/graph.py propagate_mass). The oracle unrolls all four
+    supersteps in SQL with the same integer algebra (order-independent
+    sums, defined truncation), so any k is bit-exact-checkable. Under
+    MASS_DRIVER_MAX_EDGES — every fixture and bench input — the four
+    supersteps run on the driver in NumPy, so this query attests the
+    driver path at k=4. The distributed loop's CHECKPOINTED iteration
+    path (checkpoint_every=2 localCheckpoints mid-run at k>=3) is
+    carried by the forced-distributed tests instead:
+    tests/test_graph.py runs propagate_mass with the bound at 0 for
+    k=1..4 and checkpoint_every 1 and 2, and the oracle suite repeats
+    this query with every driver bound at 0."""
     from mapreduce__spark.operators.graph import propagate_mass
 
     m = propagate_mass(_custkey_suppkey_edges(spark, sf_dir), k=4)

@@ -284,9 +284,12 @@ def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the multi-codebook case.
 
     SCALE: codebooks are PQ_M broadcast-sized (k x d/M) tables learned
-    by the centroid-broadcast k-means — a driver fit from one bounded
-    probe under the k-means bounds, else one scan + one bounded shuffle
-    per iteration covering every subspace; encoding is one Arrow pass
+    by the centroid-broadcast k-means. Under the k-means driver bounds
+    one bounded probe is the query's only Spark job: the fit AND the
+    encoding run in NumPy on the probed vectors, and the code table
+    (at most KMEANS_DRIVER_MAX_VECS rows) returns through
+    createDataFrame. Past them, one scan + one bounded shuffle per
+    iteration covers every subspace and encoding is one Arrow pass
     emitting all PQ_M codes; the corpus never shuffles. At 100 TB the
     code table (PQ_M bytes/vector) is what ships to the ANN index, not
     the vectors."""

@@ -117,9 +117,10 @@ _vec6 = st.lists(
 
 
 def _pq(df, m, k, bound):
+    """(code rows, codebooks, codes schema) with the driver bound set."""
     with mock.patch.object(clustering, "KMEANS_DRIVER_MAX_VECS", bound):
         codes, books = clustering.pq_fit(df, m, k, 2)
-        return {tuple(r) for r in codes.collect()}, books
+        return {tuple(r) for r in codes.collect()}, books, codes.schema
 
 
 @given(
@@ -132,15 +133,17 @@ def test_pq_fit_equals_per_subspace_kmeans_on_both_paths(spark, vecs, m, k):
     """pq_fit is m independent kmeans_fit calls on the F.slice'd
     subvectors, fused: the same codes, recon_err (the sum of the
     per-subspace dist2) and codebooks. The distributed path (a zero
-    KMEANS_DRIVER_MAX_VECS) equals the driver path, which equals the m
-    kmeans_fit calls; kmeans_fit's own two paths are equal by
+    KMEANS_DRIVER_MAX_VECS) equals the driver path — rows, codebooks and
+    the codes DataFrame's schema, though the driver path encodes in
+    NumPy and the distributed one in a mapInArrow pass — which equals
+    the m kmeans_fit calls; kmeans_fit's own two paths are equal by
     test_kmeans_driver_fit_matches_distributed."""
     from pyspark.sql import functions as F
 
     rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
     df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    got, books = _pq(df, m, k, 10**6)
-    assert (got, books) == _pq(df, m, k, 0)
+    got, books, schema = _pq(df, m, k, 10**6)
+    assert (got, books, schema) == _pq(df, m, k, 0)
     d = 6 // m
     want, want_books = {}, []
     for s in range(m):
@@ -154,6 +157,25 @@ def test_pq_fit_equals_per_subspace_kmeans_on_both_paths(spark, vecs, m, k):
             want[r.vec_id] = (c + (r.cluster_id,), e + r.dist2)
     assert got == {(v, *c, e) for v, (c, e) in want.items()}
     assert books == want_books
+
+
+def test_pq_fit_driver_path_encodes_without_python_workers(spark):
+    """Under the driver bound the probe already holds every vector, so
+    the codes come back through createDataFrame: no MapInArrow node in
+    the plan (no Python-worker pass re-reading the corpus). Past the
+    bound the encoding is the distributed mapInArrow pass."""
+    df = spark.createDataFrame(
+        [(i, [0.1 * (i % 3), 0.2, -0.1 * (i % 2), 0.4]) for i in range(6)],
+        "vec_id bigint, embedding array<float>",
+    )
+
+    def plan(bound):
+        with mock.patch.object(clustering, "KMEANS_DRIVER_MAX_VECS", bound):
+            codes, _ = clustering.pq_fit(df, 2, 2, 2)
+            return codes._jdf.queryExecution().executedPlan().toString()
+
+    assert "MapInArrow" not in plan(10**6)
+    assert "MapInArrow" in plan(0)
 
 
 @pytest.mark.parametrize(

@@ -1,9 +1,17 @@
-"""Connected-components operator: known graphs, convergence, determinism."""
+"""Graph operators (operators/graph.py): connected components, mass
+propagation, triangles and k-core peeling — known graphs, hand folds,
+and each driver fast path against the distributed path it shortcuts."""
 
 from __future__ import annotations
 
+from itertools import combinations
+from unittest import mock
+
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
+
 from mapreduce__spark.operators import graph
-from mapreduce__spark.operators.graph import connected_components
+from mapreduce__spark.operators.graph import connected_components, count_triangles
 
 
 def cc_dict(spark, edges):
@@ -54,11 +62,13 @@ def test_driver_and_distributed_paths_agree(spark, monkeypatch):
         assert fast == dist and len(fast) == n_nodes  # 9 + 3 + 2 (+ 2) nodes
 
 
-def test_propagate_mass_matches_hand_fold(spark):
+def test_propagate_mass_matches_hand_fold(spark, monkeypatch):
     """k-superstep integer mass propagation on a tiny bipartite graph,
     checked against a single-threaded fold for k=1..4 (odd k ends
-    s-keyed, even k c-keyed; checkpoint_every=2 exercises the
-    mid-loop lineage truncation at k>=3)."""
+    s-keyed, even k c-keyed) on both paths: the NumPy driver path under
+    MASS_DRIVER_MAX_EDGES, then the distributed loop forced by a zero
+    bound, where checkpoint_every=2 exercises the mid-loop lineage
+    truncation at k>=3."""
     from mapreduce__spark.operators.graph import propagate_mass
 
     edges = [(1, 10), (1, 11), (2, 10), (3, 12)]
@@ -82,9 +92,43 @@ def test_propagate_mass_matches_hand_fold(spark):
             mass = dict(nxt)
         return mass
 
-    for k in range(1, 5):
-        got = {tuple(r) for r in propagate_mass(df, k=k).collect()}
-        assert got == set(fold(k).items()), f"k={k}"
+    for bound in (graph.MASS_DRIVER_MAX_EDGES, 0):
+        monkeypatch.setattr(graph, "MASS_DRIVER_MAX_EDGES", bound)
+        for k in range(1, 5):
+            got = {tuple(r) for r in propagate_mass(df, k=k).collect()}
+            assert got == set(fold(k).items()), f"k={k} bound={bound}"
+
+
+@given(
+    st.lists(
+        st.tuples(st.integers(0, 5), st.integers(100, 105)), max_size=20
+    ),
+    st.integers(1, 4),
+    st.sampled_from([1, 2]),
+)
+@example([], 2, 2)  # empty edge list
+@example([(0, 100), (0, 100), (1, 100), (1, 101)], 3, 1)  # repeated pair
+@example([(0, 100), (None, 100), (1, 101)], 2, 2)  # NULL endpoint
+@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
+def test_mass_driver_path_matches_distributed(spark, edges, k, every):
+    """The MASS_DRIVER_MAX_EDGES fast path is a pure materialization
+    choice: on random bipartite edge lists (int c, bigint s) the NumPy
+    supersteps and the distributed loop return identical rows AND
+    schemas — the key typed like its edge column, mass bigint. A pair
+    listed twice counts twice on both paths; a NULL endpoint takes the
+    distributed path, so both agree on it too."""
+    df = spark.createDataFrame(edges, "c int, s bigint")
+
+    def run(bound):
+        with mock.patch.object(graph, "MASS_DRIVER_MAX_EDGES", bound):
+            out = graph.propagate_mass(df, k, checkpoint_every=every)
+            return out.schema, sorted(out.collect(), key=str)
+
+    fast = run(10**6)
+    assert fast == run(0)
+    assert fast[0].simpleString() == (
+        "struct<c:int,mass:bigint>" if k % 2 == 0 else "struct<s:bigint,mass:bigint>"
+    )
 
 
 def test_propagate_mass_rejects_bad_k(spark):
@@ -95,6 +139,9 @@ def test_propagate_mass_rejects_bad_k(spark):
     df = spark.createDataFrame([(1, 10)], "c bigint, s bigint")
     with pytest.raises(ValueError, match="k must be"):
         propagate_mass(df, k=0)
+    # negative mass is where `//` (driver) and SQL `div` (distributed) part
+    with pytest.raises(ValueError, match="initial_mass must be"):
+        propagate_mass(df, k=1, initial_mass=-1)
 
 
 def test_distributed_cc_raises_when_unconverged(spark, monkeypatch):
@@ -130,15 +177,6 @@ def test_driver_path_widens_mixed_key_types(spark):
 
 
 # ---------------------------------------------------------------- triangles
-
-
-from itertools import combinations
-from unittest import mock
-
-from hypothesis import HealthCheck, example, given, settings
-from hypothesis import strategies as st
-
-from mapreduce__spark.operators.graph import count_triangles
 
 
 def tri_dict(spark, edges):

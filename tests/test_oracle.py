@@ -35,6 +35,41 @@ def test_query_matches_oracle(spark, sf_small, name):
     assert df.take(1), f"{name}: empty result at sf0.001 — vacuous oracle gate"
 
 
+# Queries behind the driver-or-distributed seam (staging.bounded_int64).
+# At sf0.001 every one of them takes its driver path above, so the
+# distributed algorithms are oracle-checked here, with every driver bound
+# at 0.
+SEAM_QUERIES = [
+    "ann_topk_pq_adc",
+    "cluster_balanced_sample",
+    "embedding_cluster_outliers",
+    "embedding_pq_codes",
+    "graph_mass_propagation",
+    "graph_mass_propagation_k4",
+    "graph_triangles",
+    "k_core_peel",
+    "kmeans_embeddings",
+    "semantic_dedup",
+]
+
+
+@pytest.mark.parametrize("name", SEAM_QUERIES)
+def test_distributed_path_matches_oracle(spark, sf_small, monkeypatch, name):
+    from mapreduce__spark.operators import clustering, graph
+
+    for bound in (
+        "MASS_DRIVER_MAX_EDGES",
+        "CC_DRIVER_MAX_EDGES",
+        "KCORE_DRIVER_MAX_EDGES",
+        "TRIANGLES_DRIVER_MAX_EDGES",
+    ):
+        monkeypatch.setattr(graph, bound, 0)
+    monkeypatch.setattr(clustering, "KMEANS_DRIVER_MAX_VECS", 0)
+    q = REGISTRY[name]
+    ok, msg = compare_with_oracle(q.fn(spark, sf_small), q.oracle, sf_small)
+    assert ok, f"{name} (driver paths off): {msg}"
+
+
 @pytest.mark.parametrize("name", ROWS_ONLY_QUERIES)
 def test_rows_only_query_runs(spark, sf_small, name):
     """Non-SQL-expressible queries must still run, produce rows, and keep

@@ -60,6 +60,12 @@ CHANGED_CODE_REATTEST: set[str] = {
     "graph_triangles",
     "embedding_pq_codes",
     "ann_topk_pq_adc",
+    # propagate_mass gained a NumPy driver path and pq_fit's final
+    # encoding moved to the driver under its bound, after 3 / 4 green
+    # rows (graph_mass_propagation_k4; semantic_dedup, a kmeans_assign
+    # caller); each displaced one filler below
+    "graph_mass_propagation_k4",
+    "semantic_dedup",
 }
 
 # Saturation retirement (round-10 VERDICT item 8): a query holding
@@ -89,8 +95,6 @@ TRIPLE_FILLERS: set[str] = {
     "kernel_search_count",
     "sequence_packing",
     "training_data_pipeline",
-    "pii_scrub",
-    "dedup_embedding_cosine",
 }
 _DISPLACEMENT_LOG = {
     # (round-14 additions pop the newest-last-green filler first — the
@@ -113,9 +117,11 @@ _DISPLACEMENT_LOG = {
     # not as a filler), then the r4 group from embedding_correlation
     # (by graph_triangles), ann_topk_bruteforce (by embedding_pq_codes)
     # and dedup_clusters (by ann_topk_pq_adc) — these three re-attest
-    # via CHANGED_CODE_REATTEST — then the rest of the r4 group from
-    # dedup_embedding_cosine, then the r3 group ending at
-    # scalar_functions.)
+    # via CHANGED_CODE_REATTEST — then dedup_embedding_cosine (by
+    # graph_mass_propagation_k4) and pii_scrub (by semantic_dedup),
+    # both re-attesting via CHANGED_CODE_REATTEST too — then the rest
+    # of the r4 group from training_data_pipeline, then the r3 group
+    # ending at scalar_functions.)
 }
 
 
