@@ -578,7 +578,7 @@ def _run_graph_emb_scaling(spark, base_timings: dict[str, float]) -> dict:
     and semantic_dedup additionally measure a SECOND decade (x100b/g100,
     round-13 VERDICT item 6) so their scale claims are proven two
     decades deep like the LSH/pipeline tiers."""
-    from mapreduce__spark.plans.tier2 import SEMDEDUP_K, semantic_dedup_df
+    from mapreduce__spark.plans.tier2_dedup import SEMDEDUP_K, semantic_dedup_df
 
     below = "/root/testdata/sf0.01"
     out: dict[str, dict] = {}

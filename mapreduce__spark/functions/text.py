@@ -94,7 +94,7 @@ def lang_id_expr(tokens: Column) -> Column:
 
 
 # --------------------------------------------------------------------------
-# PII + quality expressions (shared by the batch queries in plans/tier2 and
+# PII + quality expressions (shared by the batch queries in plans/tier2_* and
 # the streaming twins in mapreduce__spark.streaming — same Column exprs, so
 # stream output is bit-identical to batch by construction).
 # --------------------------------------------------------------------------
@@ -129,7 +129,7 @@ def pii_count_expr(text: Column) -> Column:
 def gopher_rule_columns(text: Column) -> dict[str, Column]:
     """The Gopher-style quality rule metrics + composite keep flag, as ONE
     source of truth shared by the audited batch query
-    (plans/tier2.gopher_quality_rules) and the streaming twin
+    (plans/tier2_pipeline.gopher_quality_rules) and the streaming twin
     (streaming.stream_quality_scrub) — batch/stream bit-identity depends
     on both sides using exactly these expressions."""
     toks = tokenize(text)

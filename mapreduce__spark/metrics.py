@@ -4,8 +4,8 @@ The reference appends thread lifecycle lines and per-phase wall times
 ("Map and Shuffle took X ns", "Reduce took Y ns") to a hidden log file
 (MapReduceFramework.cpp:107-219, log name at :20, writes at :637-643).
 Spark's own event log / UI supersedes the thread-level detail; what's
-worth keeping is the per-phase wall-clock record, which `bench.py` and
-users of the kernel consume.
+worth keeping is the per-phase wall-clock record, kept here as the
+reference job-log parity feature (SURVEY.md F11) for users of the kernel.
 
 `PhaseTimer` is deliberately tiny: name a phase, `with` it, read or dump
 the records. Timestamps use the reference's [DD.MM.YYYY HH:MM:SS] framing

@@ -395,7 +395,7 @@ def hll_union(a: DataFrame, b: DataFrame, keys: list[str] | None = None) -> Data
     over the three summaries (|A| + |B| - |A ∪ B|), whose error
     compounds — fine for overlap-rate profiling, not for small
     intersections of huge sets (the classic caveat). The registry face
-    of this algebra is hll_set_overlap (plans/tier2.py), driver-attested
+    of this algebra is hll_set_overlap (plans/tier2_stats.py), driver-attested
     since round 10."""
     keys = keys or []
     return (

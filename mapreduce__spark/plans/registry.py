@@ -226,12 +226,13 @@ def get_oracle_sql() -> dict[str, str]:
     # binaryfile_ingest's oracle reads the staged fixture directory with
     # read_blob, and the driver may run oracles before (or without) the
     # matching Spark halves — so requesting the oracle surface stages the
-    # fixture corpora. Late import: tier2 imports this module at load,
-    # but by call time it is fully initialized (first-use lazy staging,
-    # round-9 verdict item 6 — module import touches no filesystem).
-    from mapreduce__spark.plans import tier2
+    # fixture corpora. Late import: tier2_text imports this module at
+    # load, but by call time it is fully initialized (first-use lazy
+    # staging, round-9 verdict item 6 — module import touches no
+    # filesystem).
+    from mapreduce__spark.plans import tier2_text
 
-    tier2.stage_fixture_corpora()
+    tier2_text.stage_fixture_corpora()
     return {
         n: REGISTRY[n].oracle for n in ordered_names() if REGISTRY[n].oracle is not None
     }

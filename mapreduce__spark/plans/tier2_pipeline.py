@@ -1345,7 +1345,6 @@ def training_data_pipeline_full(
     spark: SparkSession,
     sf_dir: str,
     staging_dir: str | None = None,
-    timer=None,
 ) -> DataFrame:
     """The complete modern training-data pipeline as ONE DataFrame program
     — `training_data_pipeline` (quality → dedup → cluster removal → split
@@ -1371,21 +1370,10 @@ def training_data_pipeline_full(
     signatures) from executor-memory checkpoints to durable parquet —
     the 100 TB shape; see :mod:`operators.staging`. Value-identical
     (tests/test_staging.py).
-
-    `timer` (a metrics.PhaseTimer, default None) is the PROFILING seam:
-    when set, each stage is forced with an extra checkpoint/count inside
-    a named phase so per-stage wall time is attributable (docs/SCALE.md
-    stage table). The forced materializations make the profiled run's
-    plan differ from production — timer=None is byte-identical to the
-    pre-seam code path and is what every declared query runs.
     """
-    from contextlib import nullcontext
-
     from mapreduce__spark.operators.graph import connected_components
     from mapreduce__spark.operators.staging import stage
     from mapreduce__spark.operators.windows import distributed_cumsum_grouped, idiv
-
-    ph = timer.phase if timer is not None else (lambda _name: nullcontext())
 
     docs = load_table(spark, sf_dir, "documents")
     # The scrubbed corpus feeds FOUR independent consumers (quality gate,
@@ -1397,14 +1385,11 @@ def training_data_pipeline_full(
     # end-to-end flagship at sf0.1), or durable parquet under
     # `staging_dir` — the 100 TB shape, where a corpus-sized relation
     # does not fit executor storage and must survive executor loss.
-    with ph("scrub"):
-        scrubbed = stage(
-            docs.select("doc_id", pii_scrub_expr(F.col("text")).alias("text")),
-            staging_dir,
-            "scrubbed",
-        )
-        if timer is not None:
-            scrubbed.count()
+    scrubbed = stage(
+        docs.select("doc_id", pii_scrub_expr(F.col("text")).alias("text")),
+        staging_dir,
+        "scrubbed",
+    )
 
     toks = tokenize(F.col("text"))
     quality = scrubbed.where(quality_keep_expr(F.col("text"))).select(
@@ -1440,68 +1425,55 @@ def training_data_pipeline_full(
     # `decon` is the surviving corpus and feeds THREE consumers (exact
     # dedup, LSH signatures, the survivors join); without materialization
     # each re-runs the contamination gram join above.
-    with ph("decontaminate"):
-        decon = stage(
-            quality.where(~is_eval).join(contaminated, "doc_id", "left_anti"),
-            staging_dir,
-            "decontaminated",
-        )
-        if timer is not None:
-            decon.count()
+    decon = stage(
+        quality.where(~is_eval).join(contaminated, "doc_id", "left_anti"),
+        staging_dir,
+        "decontaminated",
+    )
 
-    with ph("exact_dedup"):
-        narrow = decon.select(
-            "doc_id", F.md5("text").alias("_fp"), F.length("text").alias("_len")
-        )
-        wfp = Window.partitionBy("_fp")
-        exact_deduped = (
-            narrow.withColumn("_min_id", F.min("doc_id").over(wfp))
-            .where(F.col("doc_id") == F.col("_min_id"))
-            .select("doc_id", "_len")
-        )
-        if timer is not None:
-            exact_deduped = exact_deduped.localCheckpoint(eager=True)
+    narrow = decon.select(
+        "doc_id", F.md5("text").alias("_fp"), F.length("text").alias("_len")
+    )
+    wfp = Window.partitionBy("_fp")
+    exact_deduped = (
+        narrow.withColumn("_min_id", F.min("doc_id").over(wfp))
+        .where(F.col("doc_id") == F.col("_min_id"))
+        .select("doc_id", "_len")
+    )
 
     # Verification texts come from `scrubbed` (scan-stage regexes only):
     # decon docs carry SCRUBBED text, so the raw table would be wrong, but
     # re-running the decontamination joins just to read texts is waste —
     # scrubbed is the cheapest equal-valued superset.
-    with ph("lsh_near_dedup"):
-        pairs = lsh_near_duplicate_pairs(
-            decon,
-            JACCARD_THRESHOLD,
-            num_hashes=16,
-            bands=8,
-            text_source=scrubbed,
-            staging_dir=staging_dir,
-        )
-        cc = connected_components(pairs, "id1", "id2")
-        removal = cc.where(F.col("component") < F.col("node")).select(
-            F.col("node").alias("doc_id")
-        )
-        survivors = exact_deduped.join(removal, "doc_id", "left_anti")
-        if timer is not None:
-            survivors = survivors.localCheckpoint(eager=True)
+    pairs = lsh_near_duplicate_pairs(
+        decon,
+        JACCARD_THRESHOLD,
+        num_hashes=16,
+        bands=8,
+        text_source=scrubbed,
+        staging_dir=staging_dir,
+    )
+    cc = connected_components(pairs, "id1", "id2")
+    removal = cc.where(F.col("component") < F.col("node")).select(
+        F.col("node").alias("doc_id")
+    )
+    survivors = exact_deduped.join(removal, "doc_id", "left_anti")
 
-    with ph("split_pack"):
-        bucket = split_bucket_expr(F.col("doc_id"))
-        with_split = survivors.select(
-            "doc_id",
-            F.ceil(F.col("_len") / 4.0).cast("bigint").alias("n_tokens"),
-            F.when(bucket < 8, "train").otherwise("holdout").alias("split"),
-        )
-        packed = distributed_cumsum_grouped(
-            with_split, ["split"], "doc_id", "n_tokens", "cum"
-        )
-        out = packed.select(
-            "doc_id",
-            "n_tokens",
-            "split",
-            idiv(F.col("cum") - F.col("n_tokens"), 2048).alias("bin"),
-        )
-        if timer is not None:
-            out = out.localCheckpoint(eager=True)
-    return out
+    bucket = split_bucket_expr(F.col("doc_id"))
+    with_split = survivors.select(
+        "doc_id",
+        F.ceil(F.col("_len") / 4.0).cast("bigint").alias("n_tokens"),
+        F.when(bucket < 8, "train").otherwise("holdout").alias("split"),
+    )
+    packed = distributed_cumsum_grouped(
+        with_split, ["split"], "doc_id", "n_tokens", "cum"
+    )
+    return packed.select(
+        "doc_id",
+        "n_tokens",
+        "split",
+        idiv(F.col("cum") - F.col("n_tokens"), 2048).alias("bin"),
+    )
 
 
 @query(

@@ -1,4 +1,4 @@
-"""Shared constants, helpers and cross-family queries for the tier-2 family modules (split from tier2.py, round 13). Imported FIRST by the tier2 facade so every family module can star-import it."""
+"""Shared constants, helpers and cross-family queries for the tier-2 family modules (split from tier2.py, round 13). plans/__init__.py imports it first of the nine family modules, and every family module star-imports it."""
 
 from __future__ import annotations
 
@@ -592,6 +592,5 @@ def bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # star-export EVERYTHING (underscore helpers included: the family
-# modules and the tier2 facade re-export by name, and tests reach
-# private helpers through the facade)
+# modules use the shared private helpers by name)
 __all__ = [k for k in list(globals()) if not k.startswith('__')]

@@ -1,6 +1,6 @@
 """Structured Streaming counterparts of the event-window queries (O-26).
 
-The batch forms in plans/tier2.py are the oracle-checkable semantics; the
+The batch forms in plans/tier2_events.py are the oracle-checkable semantics; the
 functions here run the SAME logical shapes as true streams:
 
 * file-source `readStream` over the events parquet (in production: Kafka —

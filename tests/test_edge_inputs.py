@@ -71,7 +71,7 @@ def test_pretoken_regex_portable_across_java_and_re2(spark):
 
     from pyspark.sql import functions as F
 
-    from mapreduce__spark.plans.tier2 import _PRETOKEN_RE
+    from mapreduce__spark.plans.tier2_text import _PRETOKEN_RE
 
     samples = ["a\x0bb", "ab1, cd!!e 42", "x\x0b\x0b!y", "a\tb\nc", "...", "", "  "]
     sdf = spark.createDataFrame([(s,) for s in samples], "t string")

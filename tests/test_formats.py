@@ -104,32 +104,28 @@ def test_fixture_staging_nondefault_dir_roundtrips(spark, tmp_path, monkeypatch)
     existing file rather than trust it blindly."""
     import os
 
-    # patch the DEFINING module (tier2_shared since the round-13 family
-    # split): the tier2 facade re-exports values by copy, so patching
-    # the facade attribute would not reach the staging functions'
-    # globals
-    from mapreduce__spark.plans import tier2_shared as tier2
+    from mapreduce__spark.plans import tier2_shared as shared
 
     bdir = str(tmp_path / "bin" / "v1")
     xdir = str(tmp_path / "xml" / "v1")
-    monkeypatch.setattr(tier2, "BINARYFILE_DIR", bdir)
-    monkeypatch.setattr(tier2, "XML_DIR", xdir)
+    monkeypatch.setattr(shared, "BINARYFILE_DIR", bdir)
+    monkeypatch.setattr(shared, "XML_DIR", xdir)
 
-    assert tier2._stage_binaryfile_corpus() == bdir
-    assert len(os.listdir(bdir)) == tier2.BINARYFILE_N
+    assert shared._stage_binaryfile_corpus() == bdir
+    assert len(os.listdir(bdir)) == shared.BINARYFILE_N
     files = (
         spark.read.format("binaryFile").option("pathGlobFilter", "*.bmp").load(bdir)
     )
-    assert files.count() == tier2.BINARYFILE_N
+    assert files.count() == shared.BINARYFILE_N
 
-    assert tier2._stage_xml_corpus() == xdir
+    assert shared._stage_xml_corpus() == xdir
     rows = (
         spark.read.format("xml")
         .option("rowTag", "r")
         .schema("id bigint, cat string, cents bigint, txt string")
         .load(xdir)
     )
-    assert rows.count() == tier2.XML_N
+    assert rows.count() == shared.XML_N
 
     # corrupt one staged file: a re-stage must detect the size mismatch
     # and rewrite it (the old skip-if-exists trusted any bytes there)
@@ -137,17 +133,17 @@ def test_fixture_staging_nondefault_dir_roundtrips(spark, tmp_path, monkeypatch)
     good = open(victim, "rb").read()
     with open(victim, "wb") as fh:
         fh.write(b"junk")
-    tier2._stage_binaryfile_corpus()
+    shared._stage_binaryfile_corpus()
     assert open(victim, "rb").read() == good
 
 
 def test_fixture_root_is_per_user_and_env_overridable(monkeypatch):
     import os
 
-    from mapreduce__spark.plans import tier2
+    from mapreduce__spark.plans import tier2_shared
 
     monkeypatch.delenv("SPARK_GRAFT_FIXTURE_DIR", raising=False)
-    root = tier2._fixture_root()
+    root = tier2_shared._fixture_root()
     assert root.endswith(f"-uid{os.getuid()}")
     monkeypatch.setenv("SPARK_GRAFT_FIXTURE_DIR", "/elsewhere/fixtures")
-    assert tier2._fixture_root() == "/elsewhere/fixtures"
+    assert tier2_shared._fixture_root() == "/elsewhere/fixtures"

@@ -797,7 +797,7 @@ def test_bpe_encode_matches_pure_python_reference(spark, sf_oracle):
 
     from mapreduce__spark.functions.bpe import encode_tokens, train_bpe_merges
     from mapreduce__spark.plans import REGISTRY
-    from mapreduce__spark.plans.tier2 import BPE_NUM_MERGES, BPE_TRAIN_VOCAB
+    from mapreduce__spark.plans.tier2_pipeline import BPE_NUM_MERGES, BPE_TRAIN_VOCAB
 
     rows = load_table(spark, sf_oracle, "documents").select("doc_id", "text").collect()
     freq = Counter()
@@ -1024,7 +1024,7 @@ def test_boilerplate_removal_drops_cross_doc_chunks(spark, sf_oracle):
     self-consistent: dropped + surviving chunk counts reconcile, and a doc
     whose chunks all survive keeps its text verbatim (modulo the chunk
     rebuild's space join, which is exact on this single-space corpus)."""
-    from mapreduce__spark.plans.tier2 import boilerplate_removal
+    from mapreduce__spark.plans.tier2_dedup import boilerplate_removal
 
     out = boilerplate_removal(spark, sf_oracle).collect()
     assert sum(r.n_boiler for r in out) > 0, "no boilerplate found — vacuous"
@@ -1043,7 +1043,7 @@ def test_per_source_cap_caps_every_source(spark, sf_oracle):
     """Cap semantics: no source exceeds PER_SOURCE_CAP, every source with
     >= cap docs is cut to exactly the cap (the fixtures carry 25 docs per
     source, above the cap of 15), and the draw is deterministic."""
-    from mapreduce__spark.plans.tier2 import PER_SOURCE_CAP, per_source_cap
+    from mapreduce__spark.plans.tier2_pipeline import PER_SOURCE_CAP, per_source_cap
 
     out = per_source_cap(spark, sf_oracle)
     per_src = {r.source: r.n for r in out.groupBy("source").agg(F.count("*").alias("n")).collect()}
@@ -1057,7 +1057,7 @@ def test_weighted_sample_is_deterministic_and_proper_subset(spark, sf_oracle):
     """The hash-Bernoulli sample must actually sample (neither empty nor
     everything), repeat identically across runs, and never keep a
     zero-weight row."""
-    from mapreduce__spark.plans.tier2 import weighted_sample
+    from mapreduce__spark.plans.tier2_pipeline import weighted_sample
 
     docs_n = load_table(spark, sf_oracle, "documents").count()
     rows = weighted_sample(spark, sf_oracle).collect()
@@ -1102,7 +1102,7 @@ def test_boilerplate_hashed_variant_matches_raw(spark, sf_small):
     """hash_chunks=True is the 100 TB shape — DF counted on
     xxhash64(chunk), 8-byte shuffle keys — and must produce the exact
     raw-string result (collision risk at this corpus size is ~0)."""
-    from mapreduce__spark.plans.tier2 import boilerplate_removal
+    from mapreduce__spark.plans.tier2_dedup import boilerplate_removal
 
     raw = boilerplate_removal(spark, sf_small)
     hashed = boilerplate_removal(spark, sf_small, hash_chunks=True)
@@ -1189,7 +1189,7 @@ def test_substring_dedup_windows_planted_spans(spark, tmp_path):
     dup_ratio 1.0, a unique doc 0.0, and a doc sharing exactly one
     30-token span with another reports exactly the windows inside that
     span as duplicated."""
-    from mapreduce__spark.plans.tier2 import SUBSTR_WIN, substring_dedup_windows
+    from mapreduce__spark.plans.tier2_dedup import SUBSTR_WIN, substring_dedup_windows
 
     span = " ".join(f"s{i}" for i in range(SUBSTR_WIN))  # 30 shared tokens
     uniq_a = " ".join(f"a{i}" for i in range(20))
@@ -1219,7 +1219,7 @@ def test_substring_dedup_windows_planted_spans(spark, tmp_path):
 def test_domain_mixture_weights_planted_sources(spark, tmp_path):
     """Weights must equal min(cap, uniform_target/actual) on known token
     counts, and shares must sum to 1."""
-    from mapreduce__spark.plans.tier2 import (
+    from mapreduce__spark.plans.tier2_pipeline import (
         MIXTURE_WEIGHT_CAP,
         domain_mixture_weights,
     )
@@ -1285,7 +1285,7 @@ def test_substring_dedup_hashed_variant_matches_raw(spark, sf_small):
     """hash_windows=True must produce the exact raw-string result while
     shuffling only 8-byte keys (the window string never leaves the scan
     stage — this metric has no rebuild step to carry it for)."""
-    from mapreduce__spark.plans.tier2 import substring_dedup_windows
+    from mapreduce__spark.plans.tier2_dedup import substring_dedup_windows
 
     raw = substring_dedup_windows(spark, sf_small)
     hashed = substring_dedup_windows(spark, sf_small, hash_windows=True)
@@ -1325,7 +1325,7 @@ def test_events_ewma_hand_computed(spark, tmp_path):
     event returns that value verbatim."""
     import datetime as dt
 
-    from mapreduce__spark.plans.tier2 import events_ewma
+    from mapreduce__spark.plans.tier2_events import events_ewma
 
     t0 = dt.datetime(2024, 1, 1)
     rows = [
@@ -1575,7 +1575,7 @@ def test_cluster_outliers_planted(spark, tmp_path):
     concentration of measure): plant two tight clusters plus one junk
     vector far from everything; only the junk flags, and its ratio
     clears the 4x-median threshold decisively."""
-    from mapreduce__spark.plans.tier2 import embedding_cluster_outliers
+    from mapreduce__spark.plans.tier2_embedding import embedding_cluster_outliers
 
     # seeds are the k smallest vec_ids, so ids 0..3 place one seed per
     # natural group; every group then keeps its centroid and the junk

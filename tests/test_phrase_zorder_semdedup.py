@@ -6,7 +6,7 @@ vectors removed, orthogonal survivors kept, lowest id always kept)."""
 from __future__ import annotations
 
 from mapreduce__spark.plans import REGISTRY
-from mapreduce__spark.plans.tier2 import _interleave_sql
+from mapreduce__spark.plans.tier2_sources import _interleave_sql
 
 # ------------------------------------------------------------- phrase
 
@@ -146,7 +146,7 @@ def test_semantic_dedup_lowest_id_always_kept(spark, tmp_path):
 def test_prefix_jaccard_agrees_with_quadratic(spark, sf_small):
     """The prefix-filtered exact join must return exactly the pair set
     of the quadratic baseline at the same threshold on real data."""
-    from mapreduce__spark.plans.tier2 import (
+    from mapreduce__spark.plans.tier2_dedup import (
         dedup_jaccard_exact,
         dedup_jaccard_prefix,
     )

@@ -72,7 +72,7 @@ def test_no_python_in_jvm_queries(spark, sf_small):
 def test_decontamination_broadcasts_eval_side(spark, sf_small):
     """The eval side is a benchmark (tiny by construction): the gram join
     must be a broadcast hash join, never a corpus-shuffling sort-merge."""
-    from mapreduce__spark.plans.tier2 import decontaminate_eval_overlap
+    from mapreduce__spark.plans.tier2_pipeline import decontaminate_eval_overlap
 
     plan = physical(decontaminate_eval_overlap(spark, sf_small))
     assert "BroadcastHashJoin" in plan, plan
@@ -83,7 +83,7 @@ def test_bpe_pair_counts_plan_shape(spark, sf_small):
     """Top-50 cut must be a TakeOrderedAndProject over a two-phase
     (map-side combined) aggregate — never a total sort of the pair table,
     and never Python."""
-    from mapreduce__spark.plans.tier2 import bpe_pair_counts
+    from mapreduce__spark.plans.tier2_pipeline import bpe_pair_counts
 
     plan = physical(bpe_pair_counts(spark, sf_small))
     assert "TakeOrderedAndProject" in plan, plan
@@ -95,7 +95,7 @@ def test_unigram_lm_no_python_and_partial_agg(spark, sf_small):
     """LM build + scoring are pure Catalyst: partial aggregation on both
     hash-aggregates (vocab count, per-doc score), no Python nodes; the
     corpus-total join is a broadcast (1 row), not a shuffle."""
-    from mapreduce__spark.plans.tier2 import unigram_lm_score
+    from mapreduce__spark.plans.tier2_pipeline import unigram_lm_score
 
     plan = physical(unigram_lm_score(spark, sf_small))
     assert plan.count("HashAggregate") >= 4, plan
@@ -129,11 +129,8 @@ def test_bloom_prune_is_pre_shuffle_filter(spark, sf_small):
 def test_new_analytics_plan_shapes(spark, sf_small):
     """funnel: user-keyed hash joins only, no cartesian; cohort: two-phase
     aggregation; outliers: TakeOrderedAndProject bottom-k, no Python."""
-    from mapreduce__spark.plans.tier2 import (
-        embedding_outliers,
-        funnel_analysis,
-        retention_cohort,
-    )
+    from mapreduce__spark.plans.tier2_embedding import embedding_outliers
+    from mapreduce__spark.plans.tier2_events import funnel_analysis, retention_cohort
 
     plan = physical(funnel_analysis(spark, sf_small))
     assert "CartesianProduct" not in plan, plan
@@ -150,7 +147,7 @@ def test_new_analytics_plan_shapes(spark, sf_small):
 def test_scrub_and_quality_rules_zero_shuffle(spark, sf_small):
     """PII scrub and the quality rule set are scan-stage expression
     pipelines — no Exchange may appear in their plans."""
-    from mapreduce__spark.plans.tier2 import gopher_quality_rules, pii_scrub
+    from mapreduce__spark.plans.tier2_pipeline import gopher_quality_rules, pii_scrub
 
     for fn in (pii_scrub, gopher_quality_rules):
         plan = physical(fn(spark, sf_small))
@@ -161,7 +158,7 @@ def test_scrub_and_quality_rules_zero_shuffle(spark, sf_small):
 def test_embedding_dedup_never_cartesian(spark, sf_small):
     """The declared embedding near-dup operator must plan the pruned
     cluster equi-join, never the all-pairs cartesian (VERDICT item 6)."""
-    from mapreduce__spark.plans.tier2 import dedup_embedding_cosine
+    from mapreduce__spark.plans.tier2_dedup import dedup_embedding_cosine
 
     plan = physical(dedup_embedding_cosine(spark, sf_small))
     assert "CartesianProduct" not in plan, plan
@@ -174,7 +171,7 @@ def test_flagship_packing_not_split_funneled(spark, sf_small):
     that partitions on `split` must also carry the `_pid` bucket key."""
     import re
 
-    from mapreduce__spark.plans.tier2 import training_data_pipeline
+    from mapreduce__spark.plans.tier2_pipeline import training_data_pipeline
 
     plan = physical(training_data_pipeline(spark, sf_small))
     split_windows = [
@@ -204,7 +201,7 @@ def test_embedding_quantize_plan_is_shuffle_free_codegen(spark, sf_small):
     """The quantize pass (round 4) must be a pure scan-stage projection:
     per-dim stats arrive as array LITERALS (the O(d) driver collect), so
     the output plan may contain NO shuffle and NO Python eval node."""
-    from mapreduce__spark.plans.tier2 import embedding_quantize_int8
+    from mapreduce__spark.plans.tier2_embedding import embedding_quantize_int8
 
     plan = physical(embedding_quantize_int8(spark, sf_small))
     assert "Exchange" not in plan, plan
@@ -215,7 +212,7 @@ def test_user_path_transitions_plan_shape(spark, sf_small):
     """Lag window partitioned by user_id, then a two-phase (map-side
     combined) aggregate on the tiny type-pair key — no Python, no global
     (unpartitioned) window."""
-    from mapreduce__spark.plans.tier2 import user_path_transitions
+    from mapreduce__spark.plans.tier2_events import user_path_transitions
 
     plan = physical(user_path_transitions(spark, sf_small))
     assert plan.count("HashAggregate") >= 2, plan
@@ -226,7 +223,7 @@ def test_user_path_transitions_plan_shape(spark, sf_small):
 def test_stream_interval_join_batch_is_equi_join(spark, sf_small):
     """The interval join must key on user equality with the time bounds as
     post-join predicates — never a cartesian/nested-loop product."""
-    from mapreduce__spark.plans.tier2 import stream_interval_join_batch
+    from mapreduce__spark.plans.tier2_events import stream_interval_join_batch
 
     plan = physical(stream_interval_join_batch(spark, sf_small))
     assert "CartesianProduct" not in plan, plan
@@ -239,7 +236,7 @@ def test_paragraph_dedup_plan_shape(spark, sf_small):
     (the explode/min/join-back formulation exists precisely to avoid
     one), and the first-occurrence min must partial-aggregate map-side
     before the chunk-key shuffle."""
-    from mapreduce__spark.plans.tier2 import paragraph_dedup
+    from mapreduce__spark.plans.tier2_dedup import paragraph_dedup
 
     plan = physical(paragraph_dedup(spark, sf_small))
     assert "CartesianProduct" not in plan, plan
@@ -312,7 +309,7 @@ def test_per_source_zscore_no_corpus_shuffle_or_window(spark, sf_small):
     """The standardization must come from a tiny-stats broadcast join,
     never from an unordered PARTITION BY source window (which would
     shuffle AND buffer the whole corpus per source)."""
-    from mapreduce__spark.plans.tier2 import per_source_zscore
+    from mapreduce__spark.plans.tier2_stats import per_source_zscore
 
     plan = physical(per_source_zscore(spark, sf_small))
     assert "Window" not in plan, plan
@@ -328,7 +325,7 @@ def test_collocation_lift_no_wide_joins(spark, sf_small):
     vocabulary — broadcast only. A SortMergeJoin here means the doc_id
     self-join shape snuck back in; a cartesian means the pair
     generation left the array domain."""
-    from mapreduce__spark.plans.tier2 import collocation_lift
+    from mapreduce__spark.plans.tier2_text import collocation_lift
 
     plan = physical(collocation_lift(spark, sf_small))
     assert "SortMergeJoin" not in plan, plan
@@ -384,7 +381,7 @@ def test_inverted_index_single_scan_no_self_join(spark, sf_small):
     """Bigrams form scan-side via zip_with: one documents FileScan, no
     join anywhere in the plan (the naive adjacent-token pairing is a
     doc_id self-join)."""
-    from mapreduce__spark.plans.tier2 import inverted_index
+    from mapreduce__spark.plans.tier2_text import inverted_index
 
     plan = physical(inverted_index(spark, sf_small))
     assert plan.count("FileScan parquet") == 1, plan
@@ -395,7 +392,7 @@ def test_data_quality_audit_single_scan_each_table(spark, sf_small):
     """All six constraints fold into one conditional aggregate: exactly
     one orders scan and one customer scan; the report unpivot is a
     stack() over the single aggregate row, not a per-constraint pass."""
-    from mapreduce__spark.plans.tier2 import data_quality_audit
+    from mapreduce__spark.plans.tier2_pipeline import data_quality_audit
 
     plan = physical(data_quality_audit(spark, sf_small))
     assert plan.count("FileScan parquet") == 2, plan
@@ -405,7 +402,7 @@ def test_data_quality_audit_single_scan_each_table(spark, sf_small):
 def test_phrase_search_intersection_is_equi_join(spark, sf_small):
     """The postings intersection must plan as equality joins (gram
     probe + (doc_id, pos) intersection) — no nested-loop fallback."""
-    from mapreduce__spark.plans.tier2 import phrase_search
+    from mapreduce__spark.plans.tier2_text import phrase_search
 
     plan = physical(phrase_search(spark, sf_small))
     assert "CartesianProduct" not in plan, plan
@@ -417,7 +414,7 @@ def test_zorder_layout_no_window_no_join(spark, sf_small):
     min/max aggregate: no Window operator (the write path's
     percent_rank funnel is exactly what this query avoids) and no
     wide join."""
-    from mapreduce__spark.plans.tier2 import zorder_layout
+    from mapreduce__spark.plans.tier2_sources import zorder_layout
 
     plan = physical(zorder_layout(spark, sf_small))
     assert "Window" not in plan, plan
@@ -432,7 +429,7 @@ def test_semantic_dedup_pair_join_is_cluster_equi(spark, sf_small):
     domain_mixture_weights idiom), whose subtree appears three times in
     this plan (the pair join's a/b aliases plus the final keep-join each
     reference the assignment), never a real cartesian."""
-    from mapreduce__spark.plans.tier2 import semantic_dedup
+    from mapreduce__spark.plans.tier2_dedup import semantic_dedup
 
     plan = physical(semantic_dedup(spark, sf_small))
     assert "CartesianProduct" not in plan, plan
@@ -448,7 +445,7 @@ def test_prefix_jaccard_no_global_window(spark, sf_small):
     is an equi-join: no partition-less Window, no cartesian — the two
     shapes that would reintroduce the quadratic/funnel hazards the
     prefix filter exists to remove."""
-    from mapreduce__spark.plans.tier2 import dedup_jaccard_prefix
+    from mapreduce__spark.plans.tier2_dedup import dedup_jaccard_prefix
 
     plan = physical(dedup_jaccard_prefix(spark, sf_small))
     assert "CartesianProduct" not in plan, plan
@@ -463,7 +460,7 @@ def test_bm25_joins_broadcast_sized(spark, sf_small):
     relations: the gram/doc joins are broadcast hash joins, and the only
     nested-loop is the 1-row N/avgdl stats crossJoin (the
     domain_mixture_weights idiom) — never a real cartesian."""
-    from mapreduce__spark.plans.tier2 import bm25_rank
+    from mapreduce__spark.plans.tier2_text import bm25_rank
 
     plan = physical(bm25_rank(spark, sf_small))
     assert "CartesianProduct" not in plan, plan
@@ -477,7 +474,7 @@ def test_image_dhash_neardup_band_join_is_equi(spark, sf_small):
     all-pairs shape the banding exists to avoid. The pigeonhole
     completeness argument lives in the operator; this pins that the
     plan actually uses it."""
-    from mapreduce__spark.plans.tier2 import image_dhash_neardup
+    from mapreduce__spark.plans.tier2_multimodal import image_dhash_neardup
 
     plan = physical(image_dhash_neardup(spark, sf_small))
     assert "CartesianProduct" not in plan, plan
@@ -490,7 +487,7 @@ def test_unigram_viterbi_prep_shapes(spark, sf_small):
     aggregate, per-word candidate delivery via equi-join, the corpus
     total as the 1-row broadcast crossJoin (the centroid idiom) — never
     a real cartesian, never a partition-less window funnel."""
-    from mapreduce__spark.plans.tier2 import unigram_lm_tokenize
+    from mapreduce__spark.plans.tier2_text import unigram_lm_tokenize
 
     plan = physical(unigram_lm_tokenize(spark, sf_small))
     assert "CartesianProduct" not in plan, plan
@@ -502,7 +499,7 @@ def test_unigram_viterbi_prep_shapes(spark, sf_small):
 def test_url_canonicalize_is_pure_project(spark, sf_small):
     """URL canonicalization must cost ~nothing at 100 TB: no exchange,
     no join, no Python eval — one scan with codegen projects."""
-    from mapreduce__spark.plans.tier2 import url_canonicalize
+    from mapreduce__spark.plans.tier2_pipeline import url_canonicalize
 
     plan = physical(url_canonicalize(spark, sf_small))
     for bad in ("Exchange", "Join", "BatchEvalPython", "ArrowEval"):

@@ -222,7 +222,7 @@ def test_index_known_postings(spark, tmp_path):
 def test_index_df_cap_elides_stop_grams(spark, tmp_path):
     """A gram in more docs than INVIDX_DF_MAX disappears from the index
     (stop-posting elision), while a below-cap gram survives."""
-    from mapreduce__spark.plans.tier2 import INVIDX_DF_MAX
+    from mapreduce__spark.plans.tier2_text import INVIDX_DF_MAX
 
     texts = ["z z pad%d" % i for i in range(INVIDX_DF_MAX + 1)]
     texts += ["keep me", "keep me"]

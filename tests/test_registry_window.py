@@ -96,33 +96,6 @@ TRIPLE_FILLERS: set[str] = {
     "sequence_packing",
     "training_data_pipeline",
 }
-_DISPLACEMENT_LOG = {
-    # (round-14 additions pop the newest-last-green filler first — the
-    # r6 group in reverse registration order: vocab_encode (displaced by
-    # perplexity_buckets), bpe_pair_counts (by repetition_scrub),
-    # train_test_split (by incremental_kn_stats),
-    # sequence_packing_chunked (by ks_test_lengths),
-    # tfidf_top_terms (by doc_ngram_novelty),
-    # udtf_token_positions (by jsd_source_divergence),
-    # scd2_intervals (by zipf_tail_index), merge_upsert (by
-    # knn_graph_mutual), window_distribution (by
-    # dsir_importance_weights), join_bloom_pruned (by readability_fk),
-    # join_skew_salted (by session_window_agg), rolling_user_features
-    # (by keyness_llr), stateful_dedup_first_event (by
-    # temporal_split_events), sessionization (by temperature_resample),
-    # events_tumbling_window (by passage_chunk_overlap),
-    # media_header_metadata (by matryoshka_overlap),
-    # image_header_metadata (by lang_id_confusion —
-    # graph_mass_propagation holds its seat via CHANGED_CODE_REATTEST,
-    # not as a filler), then the r4 group from embedding_correlation
-    # (by graph_triangles), ann_topk_bruteforce (by embedding_pq_codes)
-    # and dedup_clusters (by ann_topk_pq_adc) — these three re-attest
-    # via CHANGED_CODE_REATTEST — then dedup_embedding_cosine (by
-    # graph_mass_propagation_k4) and pii_scrub (by semantic_dedup),
-    # both re-attesting via CHANGED_CODE_REATTEST too — then the rest
-    # of the r4 group from training_data_pipeline, then the r3 group
-    # ending at scalar_functions.)
-}
 
 
 # The round whose CORRECTNESS files informed the CURRENT window. The

@@ -34,7 +34,10 @@ def test_heavy_hitters_broadcast_and_shuffle_paths_value_equal(spark, tmp_path):
     """The size guard must be a pure plan choice: forcing the shuffle
     recount path (broadcast_limit=0) yields bit-identical output to the
     default broadcast path, and both equal directly computed truth."""
-    from mapreduce__spark.plans.tier2 import HH_BROADCAST_LIMIT, _heavy_hitters_exact
+    from mapreduce__spark.plans.tier2_stats import (
+        HH_BROADCAST_LIMIT,
+        _heavy_hitters_exact,
+    )
 
     sf, want = _write_docs(spark, tmp_path)
 
@@ -54,7 +57,7 @@ def test_heavy_hitters_shuffle_path_carries_no_broadcast_hint(spark, tmp_path):
     hint — an unconditional hint is exactly the scale hole the guard
     closes (AQE may still pick a broadcast at runtime from true sizes;
     the guard's job is to stop the plan from FORCING one)."""
-    from mapreduce__spark.plans.tier2 import _heavy_hitters_exact
+    from mapreduce__spark.plans.tier2_stats import _heavy_hitters_exact
 
     sf, _ = _write_docs(spark, tmp_path)
     guarded = _heavy_hitters_exact(spark, sf, 0)

@@ -468,7 +468,7 @@ def test_bpe_learn_matches_pure_python_trainer(spark, tmp_path):
     same merge table and symbol totals as the distributed query — the
     semantics pin that is independent of BOTH the Spark fold and the
     SQL island arithmetic."""
-    from mapreduce__spark.plans.tier2 import BPE_LEARN_ROUNDS, bpe_learn_merges
+    from mapreduce__spark.plans.tier2_pipeline import BPE_LEARN_ROUNDS, bpe_learn_merges
 
     texts = ["aaa bb aaa", "abab aaa bb", "bb bb abab a"]
     d = str(tmp_path / "sf")
@@ -787,7 +787,7 @@ def test_url_canonicalize_hazard_branches_and_plan(spark, sf_small):
     stripped with the '?' vanishing when none survive, params sorted,
     fragments dropped, and all three registered-domain branches
     (2-label, multi-label suffix, subdomain-of-suffix)."""
-    from mapreduce__spark.plans.tier2 import url_canonicalize
+    from mapreduce__spark.plans.tier2_pipeline import url_canonicalize
 
     df = url_canonicalize(spark, sf_small)
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -1017,7 +1017,7 @@ def test_parquet_footer_truncation_discipline():
     (the footer region) raises ValueError — never struct.error or a
     silent partial parse; byte-flips in the thrift region either raise
     or change parsed values, never crash with another exception."""
-    from mapreduce__spark.plans.tier2 import _stage_footer_corpus
+    from mapreduce__spark.plans.tier2_shared import _stage_footer_corpus
     from mapreduce__spark.sources.parquet_footer import parse_parquet_footer
 
     import os
@@ -1347,7 +1347,7 @@ def test_page_decode_reads_full_column_and_rejects_unsupported():
     chunks loudly (the footer-audit corpus is both)."""
     import os
 
-    from mapreduce__spark.plans.tier2 import (
+    from mapreduce__spark.plans.tier2_shared import (
         _stage_footer_corpus,
         _stage_plainpq_corpus,
     )
@@ -1377,7 +1377,7 @@ def test_rle_bp_hybrid_known_vectors_and_dict_reader():
 
     import duckdb
 
-    from mapreduce__spark.plans.tier2 import _stage_footer_corpus
+    from mapreduce__spark.plans.tier2_shared import _stage_footer_corpus
     from mapreduce__spark.sources.parquet_footer import (
         _rle_bp_hybrid,
         read_dict_column,
@@ -1420,7 +1420,7 @@ def test_csv_torture_fixture_and_third_reader():
     import csv
     import os
 
-    from mapreduce__spark.plans.tier2 import (
+    from mapreduce__spark.plans.tier2_sources import (
         CSV_TORTURE_N,
         _csv_torture_field,
         _stage_csv_torture,
@@ -1537,7 +1537,7 @@ def test_url_canonicalize_scheme_host_agree_with_urllib(spark, sf_small):
     www-strip and default-port rules."""
     from urllib.parse import urlsplit
 
-    from mapreduce__spark.plans.tier2 import url_canonicalize
+    from mapreduce__spark.plans.tier2_pipeline import url_canonicalize
 
     rows = url_canonicalize(spark, sf_small).collect()
     assert len(rows) >= 100

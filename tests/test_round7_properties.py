@@ -64,7 +64,7 @@ def test_events_ewma_matches_recurrence_reference(spark, cents):
     2-decimal values — including series longer than the window."""
     import datetime as dt
 
-    from mapreduce__spark.plans.tier2 import EWMA_N, events_ewma
+    from mapreduce__spark.plans.tier2_events import EWMA_N, events_ewma
 
     t0 = dt.datetime(2024, 1, 1)
     rows = [
@@ -102,7 +102,7 @@ def test_collocation_lift_matches_python_reference(spark, docs):
     min-support filter actually passes pairs through)."""
     import tempfile
 
-    from mapreduce__spark.plans.tier2 import (
+    from mapreduce__spark.plans.tier2_text import (
         COLLOC_MIN_SUPPORT,
         COLLOC_TOPV,
         collocation_lift,
@@ -160,7 +160,7 @@ def test_per_source_zscore_matches_python_reference(spark, rows):
     import math
     import tempfile
 
-    from mapreduce__spark.plans.tier2 import per_source_zscore
+    from mapreduce__spark.plans.tier2_stats import per_source_zscore
 
     with tempfile.TemporaryDirectory() as d:
         spark.createDataFrame(
@@ -222,7 +222,7 @@ def test_source_drift_chi2_matches_python_reference(spark, rows):
     the parity-split fixtures never produce."""
     import tempfile
 
-    from mapreduce__spark.plans.tier2 import source_drift_chi2
+    from mapreduce__spark.plans.tier2_events import source_drift_chi2
 
     # doc_id parity encodes the half: even -> ref, odd -> cur
     data, next_even, next_odd = [], 0, 1

@@ -341,7 +341,7 @@ def test_cdc_edge_docs_and_edit_locality(spark, tmp_path):
     import duckdb
 
     from mapreduce__spark.plans import REGISTRY
-    from mapreduce__spark.plans.tier2 import CDC_W
+    from mapreduce__spark.plans.tier2_dedup import CDC_W
 
     base = " ".join(f"tok{i % 37}x{i % 11}" for i in range(120))
     rows = [

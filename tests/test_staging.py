@@ -9,7 +9,8 @@ import os
 from pyspark.sql import functions as F
 
 from mapreduce__spark.operators.dedup import lsh_near_duplicate_pairs
-from mapreduce__spark.plans.tier2 import JACCARD_THRESHOLD, training_data_pipeline_full
+from mapreduce__spark.plans.tier2_pipeline import training_data_pipeline_full
+from mapreduce__spark.plans.tier2_shared import JACCARD_THRESHOLD
 from mapreduce__spark.sources import load_table
 
 

@@ -9,7 +9,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from mapreduce__spark.plans.tier2 import events_tumbling_window, sessionization
+from mapreduce__spark.plans.tier2_events import events_tumbling_window, sessionization
 from mapreduce__spark.sources import load_table
 from mapreduce__spark.streaming import (
     read_events_stream,
@@ -526,7 +526,7 @@ def test_stream_weighted_sample_equals_batch(spark, sf_small):
     """The deterministic weighted sampler is stateless and hash-decided, so
     a full stream replay must keep EXACTLY the batch query's rows — same
     ids, same columns (the two sides share one expression source)."""
-    from mapreduce__spark.plans.tier2 import weighted_sample
+    from mapreduce__spark.plans.tier2_pipeline import weighted_sample
     from mapreduce__spark.streaming.streams import (
         read_documents_stream,
         run_stream_to_memory,
@@ -1183,7 +1183,7 @@ def test_batch_mg_fold_guarantees(spark, sf_small):
     per event_type: every user with true count > N/(cap+1) is present,
     and every kept counter underestimates its true count by at most
     N/(cap+1) (never overestimates)."""
-    from mapreduce__spark.plans.tier2 import MG_FOLD_CAP
+    from mapreduce__spark.plans.tier2_events import MG_FOLD_CAP
     from mapreduce__spark.streaming.streams import batch_mg_fold
 
     ev = load_table(spark, sf_small, "events").select("event_type", "user_id")
@@ -1223,7 +1223,7 @@ def test_stream_mg_single_batch_equals_batch_fold(spark, sf_small, tmp_path):
     _mg_insert/_mg_batch_order verbatim, so this pins that neither side
     drifted from the shared fold (MG is order-dependent, which is why
     the shared deterministic order matters)."""
-    from mapreduce__spark.plans.tier2 import MG_FOLD_CAP
+    from mapreduce__spark.plans.tier2_events import MG_FOLD_CAP
     from mapreduce__spark.streaming.streams import (
         batch_mg_fold,
         run_stream_to_memory,
