@@ -5,43 +5,20 @@ low-coverage names, auto-derived from the checked-in
 CORRECTNESS_r*.json files so coverage decay is visible at a glance
 instead of being recomputed by each judge.
 
-A green row = rows_match AND schema_match AND hash_match AND no err.
-Counts cover ALL committed rounds (unlike tests/test_registry_window.py,
-which cuts at WINDOW_BASIS_ROUND to keep rotation policy stable
-mid-round); the table states its own basis so the two never read
-ambiguously."""
+Green rows and the window both come from
+mapreduce__spark.plans.registry (green_rows, driver_window), so the
+table and the window share one basis."""
 
 from __future__ import annotations
 
-import glob
-import json
 import os
 import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
-from mapreduce__spark.plans import DRIVER_WINDOW, REGISTRY  # noqa: E402
+from mapreduce__spark.plans import REGISTRY, driver_window, green_rows  # noqa: E402
 
 ROOT = os.path.join(os.path.dirname(__file__), "..")
-
-
-def green_rows(max_round: int | None = None) -> list[tuple[str, int]]:
-    rows: list[tuple[str, int]] = []
-    for path in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
-        rnd = int("".join(c for c in os.path.basename(path) if c.isdigit()))
-        if max_round is not None and rnd > max_round:
-            continue
-        with open(path) as f:
-            data = json.load(f)
-        for name, row in data.items():
-            if (
-                row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-                and not row.get("err")
-            ):
-                rows.append((name, rnd))
-    return rows
 
 
 def render(max_round: int | None = None) -> str:
@@ -98,11 +75,12 @@ def render(max_round: int | None = None) -> str:
         key=lambda n: (counts.get(n, 0), n),
     )
     if low:
+        window = set(driver_window(rows))
         lines += ["| query | greens | last green | in current window |",
                   "|---|---|---|---|"]
         for n in low:
             lg = f"r{last[n]}" if n in last else "—"
-            inw = "yes" if n in DRIVER_WINDOW else "no"
+            inw = "yes" if n in window else "no"
             lines.append(f"| `{n}` | {counts.get(n, 0)} | {lg} | {inw} |")
     else:
         lines.append("(none)")

@@ -1,9 +1,10 @@
 from mapreduce__spark.plans.registry import (
-    DRIVER_WINDOW,
     REGISTRY,
     Query,
+    driver_window,
     get_oracle_sql,
     get_queries,
+    green_rows,
     ordered_names,
 )
 
@@ -22,10 +23,11 @@ from mapreduce__spark.plans import tier2_events  # noqa: F401
 from mapreduce__spark.plans import tier2_stats  # noqa: F401
 
 __all__ = [
-    "DRIVER_WINDOW",
     "REGISTRY",
     "Query",
+    "driver_window",
     "get_oracle_sql",
     "get_queries",
+    "green_rows",
     "ordered_names",
 ]

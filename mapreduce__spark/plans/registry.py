@@ -37,6 +37,9 @@ Contract notes (driver compare):
 
 from __future__ import annotations
 
+import glob
+import json
+import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -71,151 +74,106 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
     return wrap
 
 
-# The driver's CORRECTNESS harness checks the FIRST 50 registry entries, so
-# ordering is part of the verification contract. Rotation policy (round-3
-# VERDICT item 1, extended round 5): first make EVERY oracle-bearing query
-# hold a green driver CORRECTNESS row in SOME round (achieved by r4 — the
-# r1∪r2∪r3∪r4 union covers all 107), then rotate so single-attestation
-# queries accumulate a SECOND driver round. Every window entry has a DuckDB
-# oracle (full rows+schema+hash check); queries outside the window stay
-# bit-exact-gated by the repo's own pytest oracle harness
-# (tests/test_oracle.py, all SQL-expressible queries differentially at
-# sf0.001 every run), and
-# tests/test_registry_window.py::test_rotated_out_core_stays_oracle_gated
-# pins that rotated-out entries keep their oracles.
-#
-# Round-14 rotation, DERIVED FROM DATA like rounds 6-13 (the audit-trail
-# test tests/test_registry_window.py::test_window_prioritizes_low_attestation
-# recomputes green-attestation counts from the checked-in
-# CORRECTNESS_r0*.json files and asserts the policy below, so this
-# comment cannot silently disagree with the window):
-#   IN  — every query with zero or one green driver row (the 10 round-13
-#         additions earning their second row, plus this round's new
-#         queries); ALL 10 double-attestation queries (the round-12
-#         additions earning their third row — DEFERRED_DOUBLES stays
-#         empty); and 30 exactly-3 fillers.
-#   FILLER POLICY (round-10 VERDICT item 8): fillers are chosen
-#         LEAST-RECENTLY-ATTESTED FIRST (oldest most-recent green round,
-#         registration order as tie-break) — the r14 fillers' last rows
-#         date from rounds 3-6: the four r3-last-green queries and
-#         fourteen r4 ones that funded round-13's additions, plus the
-#         twelve oldest-registered r6-last-green ones. Queries reaching
-#         SATURATED_AT (4) green rows RETIRE from rotation eligibility:
-#         they re-enter only via CHANGED_CODE_REATTEST, so driver
-#         attestation keeps cycling fresh code instead of re-attesting
-#         saturated queries (asserted by tests/test_registry_window.py::
-#         test_saturated_queries_are_retired and
-#         test_fillers_are_least_recently_attested).
-#   OUT — everything else (>=3 green rows, attested more recently —
-#         including the 27 round-11 additions, whose third rows landed
-#         in r13), each still bit-exact-gated by tests/test_oracle.py on
-#         every pytest run.
-# The intentionally-approximate (rows-only) queries sit past the window so
-# the driver report has no ambiguous "no oracle" rows (see README
-# §correctness).
-DRIVER_WINDOW: tuple[str, ...] = (
-    # round-14 additions — never driver-attested (each displaced a filler)
-    "perplexity_buckets",
-    "repetition_scrub",
-    "incremental_kn_stats",
-    "ks_test_lengths",
-    "doc_ngram_novelty",
-    "jsd_source_divergence",
-    "zipf_tail_index",
-    "knn_graph_mutual",
-    "dsir_importance_weights",
-    "readability_fk",
-    "session_window_agg",
-    "keyness_llr",
-    "temporal_split_events",
-    "temperature_resample",
-    "passage_chunk_overlap",
-    "matryoshka_overlap",
-    "lang_id_confusion",
-    # round-13 additions (single-green), earning their second row
-    "stream_mg_fold",
-    "stream_countmin_fold",
-    "stream_quantile_fold",
-    "kn_lm_score",
-    "dedup_edit_distance",
-    "theil_sen_slope",
-    "token_entropy",
-    "gini_doc_length",
-    "mutual_info_lang_source",
-    "hapax_legomena",
-    # round-12 additions (double-green), earning their third row
-    "jpeg_pixel_decode_ac_refine",
-    "lang_id_nb",
-    "png_adam7_decode",
-    "avro_ingest",
-    "mann_whitney_u",
-    "audio_adpcm_decode",
-    "funnel_conversion",
-    "ols_fit_per_source",
-    "winnowing_fingerprints",
-    "kendall_concordance",
-    # 30 least-recently-attested exactly-3 fillers (last green rows from
-    # rounds 3-6: the four r3-last-green + fourteen r4 queries that
-    # funded round-13's additions, plus the twelve oldest-registered
-    # r6-last-green ones), displaced newest-last-green-first (reverse
-    # registration order on ties) as round-14 queries land
-    "scalar_functions",
-    "word_count",
-    "dedup_exact",
-    "dedup_jaccard_exact",
-    "kernel_search_count",
-    "sequence_packing",
-    "training_data_pipeline",
-    "graph_mass_propagation",
-    # changed code re-attesting (CHANGED_CODE_REATTEST): graph_triangles
-    # gained a NumPy driver path, and embedding_pq_codes /
-    # ann_topk_pq_adc now fit every codebook in one pq_fit; each
-    # displaced the newest-last-green filler (r4 group, reverse
-    # registration order): embedding_correlation, ann_topk_bruteforce,
-    # dedup_clusters. Then propagate_mass gained a NumPy driver path
-    # (graph_mass_propagation_k4) and pq_fit encodes on the driver
-    # under its bound (semantic_dedup, a kmeans_assign caller); they
-    # displaced dedup_embedding_cosine and pii_scrub, the same way
-    "graph_triangles",
-    "embedding_pq_codes",
-    "ann_topk_pq_adc",
-    "graph_mass_propagation_k4",
-    "semantic_dedup",
-    # (fillers displaced newest-last-green-first, r6 group in reverse
-    # registration order: vocab_encode gave its slot to
-    # perplexity_buckets, bpe_pair_counts to repetition_scrub,
-    # train_test_split to incremental_kn_stats,
-    # sequence_packing_chunked to ks_test_lengths,
-    # tfidf_top_terms to doc_ngram_novelty,
-    # udtf_token_positions to jsd_source_divergence, scd2_intervals
-    # to zipf_tail_index, merge_upsert to knn_graph_mutual,
-    # window_distribution to dsir_importance_weights,
-    # join_bloom_pruned to readability_fk, join_skew_salted to
-    # session_window_agg, rolling_user_features to keyness_llr, and
-    # stateful_dedup_first_event to temporal_split_events, and
-    # sessionization to temperature_resample, and
-    # events_tumbling_window to passage_chunk_overlap, and
-    # media_header_metadata to matryoshka_overlap, and
-    # image_header_metadata to lang_id_confusion —
-    # graph_mass_propagation is SKIPPED in the pop order: its plan was
-    # restructured this round (one-checkpoint window-degree form), so
-    # its three green rows describe the old code and it must hold a
-    # seat for re-attestation; then the r4 group in reverse
-    # registration order: embedding_correlation to graph_triangles,
-    # ann_topk_bruteforce to embedding_pq_codes, dedup_clusters to
-    # ann_topk_pq_adc, dedup_embedding_cosine to
-    # graph_mass_propagation_k4, and pii_scrub to semantic_dedup)
+# The driver's CORRECTNESS harness checks only the FIRST 50 registry
+# entries, so ordering is part of the verification contract. The window is
+# derived from the checked-in CORRECTNESS_r*.json records, so it comes out
+# the same whenever the records are the same. Oracle-bearing queries rank
+# by (tier, last green round, registration index); the tiers, in order:
+#   0. no green driver row yet;
+#   1. code changed since its last green row (CHANGED_SINCE);
+#   2-4. exactly 1, 2 or 3 green rows, least recently attested first.
+# A query with SATURATED_AT or more green rows retires unless its code
+# changed. The rows-only queries never enter the window, so the driver
+# report has no ambiguous "no oracle" rows (README §correctness). Queries
+# outside the window stay bit-exact-gated by tests/test_oracle.py.
+ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+WINDOW_SIZE = 50
+SATURATED_AT = 4
+
+# The only hand-kept input: query -> newest record round taken before its
+# code changed. An entry stops counting once the query has a green row from
+# a later round, so it never needs removing after the driver re-attests.
+# Round 15's record predates the driver paths of connected_components,
+# k_core_layers, count_triangles, propagate_mass, pq_fit / kmeans_fit and
+# kmeans_assign; these are every registered query that calls one.
+CHANGED_SINCE: dict[str, int] = dict.fromkeys(
+    (
+        # connected_components
+        "entity_resolution_parts",
+        "training_data_pipeline",
+        "training_data_pipeline_full",
+        "dedup_clusters",
+        "dedup_keep_best",
+        # k_core_layers, count_triangles, propagate_mass
+        "k_core_peel",
+        "graph_triangles",
+        "graph_mass_propagation",
+        "graph_mass_propagation_k4",
+        # pq_fit, kmeans_fit and kmeans_assign
+        "embedding_pq_codes",
+        "ann_topk_pq_adc",
+        "kmeans_embeddings",
+        "embedding_cluster_outliers",
+        "cluster_balanced_sample",
+        "semantic_dedup",
+    ),
+    15,
 )
 
 
+def green_rows(max_round: int | None = None) -> list[tuple[str, int]]:
+    """(query, round) for every green row in the CORRECTNESS_r*.json
+    records up to max_round (all when None): rows, schema and value hash
+    all matched with no error."""
+    rows: list[tuple[str, int]] = []
+    for path in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
+        rnd = int("".join(c for c in os.path.basename(path) if c.isdigit()))
+        if max_round is not None and rnd > max_round:
+            continue
+        with open(path) as f:
+            data = json.load(f)
+        rows += [
+            (name, rnd)
+            for name, row in data.items()
+            if row.get("rows_match")
+            and row.get("schema_match")
+            and row.get("hash_match")
+            and not row.get("err")
+        ]
+    return rows
+
+
+def driver_window(rows: list[tuple[str, int]]) -> list[str]:
+    """The WINDOW_SIZE best-ranked oracle-bearing queries given green
+    (query, round) rows, best first."""
+    count: dict[str, int] = {}
+    last: dict[str, int] = {}
+    for name, rnd in rows:
+        count[name] = count.get(name, 0) + 1
+        last[name] = max(rnd, last.get(name, 0))
+    ranked = []
+    for index, (name, q) in enumerate(REGISTRY.items()):
+        greens = count.get(name, 0)
+        if q.oracle is None:
+            continue
+        if greens == 0:
+            tier = 0
+        elif last[name] <= CHANGED_SINCE.get(name, 0):
+            tier = 1
+        elif greens < SATURATED_AT:
+            tier = 1 + greens
+        else:
+            continue
+        ranked.append((tier, last.get(name, 0), index, name))
+    return [name for *_, name in sorted(ranked)[:WINDOW_SIZE]]
+
+
 def ordered_names() -> list[str]:
-    """Registry names with the driver-checked window first (in DRIVER_WINDOW
-    order), then all remaining queries in registration order."""
-    missing = [n for n in DRIVER_WINDOW if n not in REGISTRY]
-    if missing:
-        raise KeyError(f"DRIVER_WINDOW names not registered: {missing}")
-    tail = [n for n in REGISTRY if n not in set(DRIVER_WINDOW)]
-    return list(DRIVER_WINDOW) + tail
+    """Registry names with the driver-checked window first (best-ranked
+    first), then all remaining queries in registration order."""
+    window = driver_window(green_rows())
+    inside = set(window)
+    return window + [n for n in REGISTRY if n not in inside]
 
 
 def get_queries() -> dict[str, QueryFn]:

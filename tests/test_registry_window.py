@@ -2,20 +2,29 @@
 entries (VERDICT.md round 1), so registry ordering is part of the
 verification contract. These tests pin it.
 
-Round-5 change (round-4 ADVICE: rotation comments drifted from the code
-three times): the rotation policy is now ASSERTED FROM DATA. Green
-attestation counts are recomputed from the checked-in
-CORRECTNESS_r0*.json files, so the window either satisfies the written
-policy or the suite fails — prose can no longer silently disagree.
+The window is derived by ``registry.driver_window`` from the checked-in
+CORRECTNESS_r*.json records. The tests below recompute green counts
+through ``green_rows()`` and assert the written policy against the
+derived window, then feed ``driver_window`` hand-made rows to pin each
+rule of the ranking on its own.
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
+import subprocess
+import sys
 
-from mapreduce__spark.plans import DRIVER_WINDOW, REGISTRY, get_oracle_sql, get_queries
+from mapreduce__spark.plans import (
+    REGISTRY,
+    driver_window,
+    get_oracle_sql,
+    get_queries,
+    green_rows,
+    registry,
+)
+from mapreduce__spark.plans.registry import SATURATED_AT, WINDOW_SIZE
 
 ROOT = os.path.join(os.path.dirname(__file__), "..")
 
@@ -34,128 +43,46 @@ ROWS_ONLY = {
     "quantile_sketch_values",
 }
 
-# Round-14 rotation: the 10 round-13 singles take their second row, the
-# 10 doubles (the round-12 additions) take their third, and 30 exactly-3
-# fillers round out the 50, displaced one-by-one as round-14 additions
-# land. DEFERRED_DOUBLES stays empty.
-DEFERRED_DOUBLES: set[str] = set()
-
-# Queries whose CODE changed this round AFTER already earning >=3 green
-# driver rows — their prior attestations describe the old code, so they
-# re-enter the window even though the low-attestation rule alone would
-# exclude them. Round 14: empty so far — the one planned perf touch
-# (graph_mass_propagation, round-13 VERDICT item 2) is an exactly-3
-# filler already holding a window slot by right.
-CHANGED_CODE_REATTEST: set[str] = {
-    # propagate_mass was restructured in round 14 (one-checkpoint
-    # window-degree form), so graph_mass_propagation's three green rows
-    # describe the OLD plan: it holds its seat via the changed-code
-    # exemption — the policy's named mechanism — rather than as a
-    # filler, so the least-recently-attested filler invariant keeps
-    # binding as round-14 additions pop into the r4 filler group.
-    "graph_mass_propagation",
-    # graph_triangles (NumPy driver path) and embedding_pq_codes /
-    # ann_topk_pq_adc (one pq_fit for every codebook) changed after
-    # 4 / 3 / 3 green rows; each displaced one filler below
-    "graph_triangles",
-    "embedding_pq_codes",
-    "ann_topk_pq_adc",
-    # propagate_mass gained a NumPy driver path and pq_fit's final
-    # encoding moved to the driver under its bound, after 3 / 4 green
-    # rows (graph_mass_propagation_k4; semantic_dedup, a kmeans_assign
-    # caller); each displaced one filler below
-    "graph_mass_propagation_k4",
-    "semantic_dedup",
-}
-
-# Saturation retirement (round-10 VERDICT item 8): a query holding
-# SATURATED_AT green driver rows retires from rotation eligibility — it
-# may re-enter the window only via CHANGED_CODE_REATTEST. With the
-# registry at 177 queries and climbing, re-attesting 4-green queries
-# would starve fresh code of driver rows.
-SATURATED_AT = 4
-
-# Exactly-3-attested fillers holding the spare slots until round-14
-# additions displace them. Selection policy (round-11): the 30
-# LEAST-RECENTLY-ATTESTED exactly-3 queries — oldest most-recent green
-# round first, registration order as tie-break; displacement pops the
-# NEWEST-last-green filler first (reverse registration order on ties),
-# which preserves the least-recent invariant
-# test_fillers_are_least_recently_attested asserts. The r14 fillers'
-# last green rows date from rounds 3-6: the four r3-last-green and
-# fourteen r4-last-green queries that funded round-13's ten additions,
-# plus the twelve oldest-registered r6-last-green ones (the r6 group
-# ties at round 6, so registration order picks join_skew_salted ..
-# vocab_encode and displacement pops vocab_encode first).
-TRIPLE_FILLERS: set[str] = {
-    "scalar_functions",
-    "word_count",
-    "dedup_exact",
-    "dedup_jaccard_exact",
-    "kernel_search_count",
-    "sequence_packing",
-    "training_data_pipeline",
-}
+ORACLE = [n for n, q in REGISTRY.items() if q.oracle is not None]
 
 
-# The round whose CORRECTNESS files informed the CURRENT window. The
-# policy tests must count only rounds <= this: the driver appends
-# CORRECTNESS_r{N+1}.json for the window itself at round end, which
-# gives every in-window entry one MORE green row — counting that file
-# would flip test_window_prioritizes_low_attestation red before the
-# next rotation happens. Bump this when rotating the window.
-WINDOW_BASIS_ROUND = 13
+def _tally(rows: list[tuple[str, int]]) -> tuple[dict[str, int], dict[str, int]]:
+    """Green-row count and last green round per query."""
+    count: dict[str, int] = {}
+    last: dict[str, int] = {}
+    for name, rnd in rows:
+        count[name] = count.get(name, 0) + 1
+        last[name] = max(rnd, last.get(name, 0))
+    return count, last
 
 
-def _attestations() -> dict[str, int]:
-    """Green driver-attestation count per query across the committed
-    CORRECTNESS_r0*.json files up to WINDOW_BASIS_ROUND (a row counts
-    only if rows+schema+hash all matched with no error)."""
-    counts: dict[str, int] = {}
-    for name, rnd in _green_rows():
-        counts[name] = counts.get(name, 0) + 1
-    return counts
+def _pending(name: str, last: dict[str, int]) -> bool:
+    """In CHANGED_SINCE with no green row since its code changed."""
+    changed = registry.CHANGED_SINCE
+    return name in changed and last.get(name, 0) <= changed[name]
 
 
-def _green_rows() -> list[tuple[str, int]]:
-    """(query, round) for every green driver row up to
-    WINDOW_BASIS_ROUND."""
-    rows: list[tuple[str, int]] = []
-    for path in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
-        digits = "".join(ch for ch in os.path.basename(path) if ch.isdigit())
-        rnd = int(digits)
-        if rnd > WINDOW_BASIS_ROUND:
-            continue
-        with open(path) as f:
-            data = json.load(f)
-        for name, row in data.items():
-            ok = (
-                row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-                and not row.get("err")
-            )
-            if ok:
-                rows.append((name, rnd))
-    return rows
+def _window() -> list[str]:
+    return driver_window(green_rows())
 
 
 def test_window_is_first_50():
-    names = list(get_queries())
-    assert len(DRIVER_WINDOW) == 50
-    assert names[:50] == list(DRIVER_WINDOW)
+    window = _window()
+    assert len(window) == 50
+    assert list(get_queries())[:50] == window
 
 
 def test_window_has_no_duplicates_and_all_registered():
-    assert len(set(DRIVER_WINDOW)) == len(DRIVER_WINDOW)
-    assert set(DRIVER_WINDOW) <= set(REGISTRY)
+    window = _window()
+    assert len(set(window)) == len(window)
+    assert set(window) <= set(REGISTRY)
 
 
 def test_every_window_entry_has_oracle():
     """No ambiguous rows-only entries inside the driver-checked prefix —
     every checked query gets the full rows+schema+hash comparison."""
     oracles = get_oracle_sql()
-    missing = [n for n in DRIVER_WINDOW if n not in oracles]
+    missing = [n for n in _window() if n not in oracles]
     assert not missing, f"window entries without oracle SQL: {missing}"
 
 
@@ -163,70 +90,45 @@ def test_never_attested_queries_inside_window():
     """Converting pytest-only claims into the external driver signal is
     the whole point of rotation: any oracle-bearing query with ZERO green
     driver rows so far must be in the upcoming window."""
-    counts = _attestations()
-    never = {
-        n
-        for n in REGISTRY
-        if REGISTRY[n].oracle is not None and counts.get(n, 0) == 0
-    }
-    missing = never - set(DRIVER_WINDOW)
+    count, _ = _tally(green_rows())
+    never = {n for n in ORACLE if count.get(n, 0) == 0}
+    missing = never - set(_window())
     assert not missing, f"never-attested queries outside driver window: {missing}"
 
 
 def test_window_prioritizes_low_attestation():
-    """Round-8 policy: every query with at most ONE green driver row is
-    in the window; queries whose code changed after >=3 green rows
-    re-enter via the explicit CHANGED_CODE_REATTEST set; every
-    double-attestation query is either in-window or explicitly deferred
-    (DEFERRED_DOUBLES — never silently dropped); any remaining slots
-    hold TRIPLE_FILLERS — exactly-3-attested bench-headline queries
-    earning a fourth row. No other >=3-attested query may hold a
-    slot."""
-    counts = _attestations()
+    """Every query with at most ONE green driver row is in the window;
+    queries whose code changed since their last green row re-enter via
+    CHANGED_SINCE; every double-attestation query is in the window unless
+    the window is already full of better-ranked queries; any remaining
+    slots hold fillers — exactly-3-attested queries earning a fourth
+    row. No other >=3-attested query may hold a slot."""
+    count, last = _tally(green_rows())
+    window = set(_window())
+    fillers = {n for n in window if count.get(n, 0) == 3 and not _pending(n, last)}
     over = {
-        n: counts.get(n, 0)
-        for n in DRIVER_WINDOW
-        if counts.get(n, 0) > 2
-        and n not in CHANGED_CODE_REATTEST
-        and n not in TRIPLE_FILLERS
+        n: count.get(n, 0)
+        for n in window
+        if count.get(n, 0) > 2 and not _pending(n, last) and n not in fillers
     }
     assert not over, f">=3-attested queries occupying window slots: {over}"
-    # the fillers must be real: in-window, oracle-bearing, exactly 3
-    # green rows (a <=2-attested query gets a slot by right, not filler
-    # bookkeeping; a >=4-attested query has no business in the window)
-    assert TRIPLE_FILLERS <= set(DRIVER_WINDOW)
-    for n in TRIPLE_FILLERS:
+    for n in fillers:
         assert REGISTRY[n].oracle is not None
-        assert counts.get(n, 0) == 3, f"{n} is not an exactly-3 filler"
-    # the re-attestation list must itself be in the window and earn its
-    # exemption: each entry really does hold >=3 prior green rows (a
-    # 0/1/2-attestation query never needs the exemption to get a slot)
-    assert CHANGED_CODE_REATTEST <= set(DRIVER_WINDOW)
-    for n in CHANGED_CODE_REATTEST:
-        assert counts.get(n, 0) >= 3, f"{n} does not need the re-attest exemption"
-    low = {
-        n
-        for n in REGISTRY
-        if REGISTRY[n].oracle is not None and counts.get(n, 0) <= 1
-    }
-    unplaced_low = low - set(DRIVER_WINDOW)
+    pending = {n for n in ORACLE if _pending(n, last)}
+    unplaced_changed = pending - window
+    assert not unplaced_changed, (
+        f"changed-code queries outside the window: {unplaced_changed}"
+    )
+    low = {n for n in ORACLE if count.get(n, 0) <= 1}
+    unplaced_low = low - window
     assert not unplaced_low, (
         f"0/1-attestation queries outside the window: {unplaced_low}"
     )
-    doubles = {
-        n
-        for n in REGISTRY
-        if REGISTRY[n].oracle is not None and counts.get(n, 0) == 2
-    }
-    unplaced = doubles - set(DRIVER_WINDOW) - DEFERRED_DOUBLES
-    assert not unplaced, (
-        f"double-attestation queries neither in-window nor deferred: {unplaced}"
+    doubles = {n for n in ORACLE if count.get(n, 0) == 2 and not _pending(n, last)}
+    unplaced = doubles - window
+    assert not (unplaced and fillers), (
+        f"double-attestation queries {unplaced} lost slots to fillers {fillers}"
     )
-    # the deferral list must not rot: anything in it must actually be a
-    # double-attestation, still-registered, oracle-bearing query
-    for n in DEFERRED_DOUBLES:
-        assert n in REGISTRY and REGISTRY[n].oracle is not None
-        assert counts.get(n, 0) == 2, f"{n} no longer needs deferral bookkeeping"
 
 
 def test_rotated_out_queries_stay_oracle_gated():
@@ -235,7 +137,7 @@ def test_rotated_out_queries_stay_oracle_gated():
     EVERY oracle-carrying entry (window or not) against DuckDB each pytest
     run. So no rotated-out query may lose its oracle — that would silently
     downgrade it to a rows-only check. Exempt: the declared ROWS_ONLY set."""
-    for name in set(REGISTRY) - set(DRIVER_WINDOW):
+    for name in set(REGISTRY) - set(_window()):
         if name in ROWS_ONLY:
             assert REGISTRY[name].oracle is None, (
                 f"{name} declared rows-only but carries an oracle — move it "
@@ -251,21 +153,22 @@ def test_rotated_out_queries_stay_oracle_gated():
 def test_oracle_order_matches_query_order():
     """oracle_sql() iteration order must follow queries() order so the
     driver's 50-entry cut lands on the same prefix for both."""
-    q_names = [n for n in get_queries() if n in get_oracle_sql()]
-    assert list(get_oracle_sql()) == q_names
+    oracles = get_oracle_sql()
+    q_names = [n for n in get_queries() if n in oracles]
+    assert list(oracles) == q_names
 
 
 def test_saturated_queries_are_retired():
-    """Round-10 VERDICT item 8: a query with >= SATURATED_AT green driver
-    rows has retired from rotation — it holds a window slot only via the
-    explicit CHANGED_CODE_REATTEST exemption. This keeps the growing
-    registry cycling fresh code through driver attestation instead of
+    """A query with >= SATURATED_AT green driver rows has retired from
+    rotation — it holds a window slot only while its code changed since
+    its last green row (CHANGED_SINCE). This keeps the growing registry
+    cycling fresh code through driver attestation instead of
     re-attesting saturated queries."""
-    counts = _attestations()
+    count, last = _tally(green_rows())
     saturated_in_window = {
-        n: counts[n]
-        for n in DRIVER_WINDOW
-        if counts.get(n, 0) >= SATURATED_AT and n not in CHANGED_CODE_REATTEST
+        n: count[n]
+        for n in _window()
+        if count.get(n, 0) >= SATURATED_AT and not _pending(n, last)
     }
     assert not saturated_in_window, (
         f"retired (>= {SATURATED_AT} green rows) queries holding window "
@@ -274,26 +177,114 @@ def test_saturated_queries_are_retired():
 
 
 def test_fillers_are_least_recently_attested():
-    """Round-11 filler policy: among exactly-3-attested queries, slots go
-    to the LEAST recently attested first — every chosen filler's
-    most-recent green round is <= every unchosen exactly-3 query's.
-    Displacing fillers newest-last-green-first as new queries land
-    preserves this invariant, so the assert holds mid-round too."""
-    counts = _attestations()
-    last: dict[str, int] = {}
-    for name, rnd in _green_rows():
-        last[name] = max(rnd, last.get(name, 0))
-    pool = {
-        n
-        for n in REGISTRY
-        if REGISTRY[n].oracle is not None and counts.get(n, 0) == 3
-    }
-    unchosen = pool - TRIPLE_FILLERS
-    if not TRIPLE_FILLERS or not unchosen:
+    """Filler policy: among exactly-3-attested queries, slots go to the
+    LEAST recently attested first — every chosen filler's most-recent
+    green round is <= every unchosen exactly-3 query's."""
+    count, last = _tally(green_rows())
+    window = set(_window())
+    pool = {n for n in ORACLE if count.get(n, 0) == 3 and not _pending(n, last)}
+    fillers = pool & window
+    unchosen = pool - window
+    if not fillers or not unchosen:
         return
-    newest_chosen = max(last[n] for n in TRIPLE_FILLERS)
+    newest_chosen = max(last[n] for n in fillers)
     oldest_unchosen = min(last[n] for n in unchosen)
     assert newest_chosen <= oldest_unchosen, (
         f"filler set skips a less-recently-attested query: newest chosen "
         f"last-green r{newest_chosen} > oldest unchosen r{oldest_unchosen}"
     )
+
+
+def test_changed_since_names_registered_oracle_queries():
+    """Every CHANGED_SINCE entry names a registered, oracle-bearing query
+    and a round no newer than the newest record."""
+    newest = max(rnd for _, rnd in green_rows())
+    for name, rnd in registry.CHANGED_SINCE.items():
+        assert name in REGISTRY and REGISTRY[name].oracle is not None, name
+        assert rnd <= newest, f"{name}: round {rnd} is newer than r{newest}"
+
+
+def test_green_rows_needs_every_match_and_no_error(tmp_path, monkeypatch):
+    ok = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
+    records = {
+        "CORRECTNESS_r01.json": {
+            "a": ok,
+            "b": {**ok, "hash_match": False},
+            "c": {**ok, "err": "timeout"},
+            "d": {k: v for k, v in ok.items() if k != "schema_match"},
+        },
+        "CORRECTNESS_r02.json": {"a": ok, "b": ok},
+    }
+    for fname, data in records.items():
+        (tmp_path / fname).write_text(json.dumps(data))
+    monkeypatch.setattr(registry, "ROOT", str(tmp_path))
+    assert sorted(green_rows()) == [("a", 1), ("a", 2), ("b", 2)]
+    assert green_rows(max_round=1) == [("a", 1)]
+
+
+def _rows(greens: dict[str, list[int]]) -> list[tuple[str, int]]:
+    """Hand-made green rows: each named query gets exactly the given
+    rounds, every other oracle-bearing query is saturated."""
+    saturated = list(range(1, SATURATED_AT + 1))
+    return [(n, rnd) for n in ORACLE for rnd in greens.get(n, saturated)]
+
+
+def test_ranking_orders_tier_then_last_green_then_registration(monkeypatch):
+    a, b, c, d, e, f, g = ORACLE[:7]
+    monkeypatch.setattr(registry, "CHANGED_SINCE", {b: 9})
+    rows = _rows(
+        {
+            g: [],  # no green row
+            b: [1, 2, 3, 4, 5],  # saturated, but changed since round 9
+            f: [7],
+            e: [2, 8],
+            c: [1, 2, 9],
+            d: [1, 2, 5],  # attested before c: ranks first
+            a: [1, 2, 5],  # ties with d: registered first
+        }
+    )
+    assert driver_window(rows) == [g, b, f, e, a, d, c]
+
+
+def test_changed_since_entry_drops_out_after_a_later_green_row(monkeypatch):
+    a, b = ORACLE[:2]
+    monkeypatch.setattr(registry, "CHANGED_SINCE", {a: 9})
+    assert driver_window(_rows({a: [1, 2, 3, 4], b: [3]})) == [a, b]
+    assert driver_window(_rows({a: [1, 2, 3, 4, 10], b: [3]})) == [b]
+    assert driver_window(_rows({a: [2, 10], b: [3]})) == [b, a]
+
+
+def test_saturated_queries_are_not_eligible(monkeypatch):
+    monkeypatch.setattr(registry, "CHANGED_SINCE", {})
+    assert driver_window(_rows({})) == []
+    a = ORACLE[0]
+    assert driver_window(_rows({a: [1, 2, 3]})) == [a]
+
+
+def test_window_cuts_at_50_in_registration_order(monkeypatch):
+    monkeypatch.setattr(registry, "CHANGED_SINCE", {})
+    fresh = ORACLE[-60:]
+    assert WINDOW_SIZE == 50
+    assert driver_window(_rows({n: [] for n in fresh})) == fresh[:50]
+    assert driver_window([]) == ORACLE[:50]
+
+
+def test_plans_import_opens_no_correctness_record():
+    """Module import touches no filesystem: the window's records are read
+    when ordered_names() runs, not when the package is imported. The
+    second list shows the audit hook does see the read."""
+    code = (
+        "import sys\n"
+        "opened = []\n"
+        "sys.addaudithook(lambda ev, args: ev == 'open' and opened.append(str(args[0])))\n"
+        "import mapreduce__spark.plans as p\n"
+        "print(sum('CORRECTNESS_r' in f for f in opened))\n"
+        "p.ordered_names()\n"
+        "print(sum('CORRECTNESS_r' in f for f in opened))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=ROOT, capture_output=True, text=True, check=True
+    )
+    at_import, after_call = out.stdout.split()[-2:]
+    assert at_import == "0"
+    assert int(after_call) > 0
