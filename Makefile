@@ -1,9 +1,9 @@
 # Engine developer entry points (the reference shipped a Makefile building
-# its Search binary + static lib; ours drives tests, bench, and plan docs).
+# its Search binary + static lib; ours drives tests, bench, and profiles).
 
 PY ?= python3
 
-.PHONY: test bench plans search smoke oracle-sf01
+.PHONY: test bench profile search smoke oracle-sf01
 
 # The tier-1 gate (ROADMAP.md): every core, shared local dirs, a hard
 # timeout, and a collection error reported without hiding the rest.
@@ -21,8 +21,10 @@ bench:
 oracle-sf01:
 	$(PY) -m pytest tests/test_oracle_sf01.py -m twoscale -q
 
-plans:
-	$(PY) docs/gen_plans.py
+# Per-query profile from Spark's event log (the benchmark's parser);
+# with no query names it rewrites docs/SHUFFLE_AUDIT.json at sf0.1.
+profile:
+	$(PY) docs/query_profile.py
 
 # usage: make search WORD=.cpp DIRS=/root/reference
 search:

@@ -2187,8 +2187,8 @@ def _kn_doc_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     # T counted off the CHECKPOINTED stats relation (row-preserving inner
     # joins keep |stats| == |big| == T by construction): counting `big`
     # directly replans a second full corpus explode (seen in the round-13
-    # PLANS.md skeleton before this fix) — the unigram_lm_score vocab
-    # lesson again.
+    # plan before this fix; `docs/query_profile.py` prints the current one) —
+    # the unigram_lm_score vocab lesson again.
     ttot = stats.agg(F.count(F.lit(1)).cast("double").alias("t"))
 
     mix = (

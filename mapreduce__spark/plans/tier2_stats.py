@@ -966,8 +966,8 @@ def equidepth_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # MATERIALIZED: the histogram (distinct lengths — tiny) feeds the
     # total, the threshold window AND the final bucket mapping; left
     # lazy, the threshold path replans its own full corpus scan (the
-    # unigram_lm_score vocab lesson, confirmed by the PLANS.md skeleton
-    # showing 2 FileScans before this checkpoint).
+    # unigram_lm_score vocab lesson, confirmed by a plan showing 2
+    # FileScans before this checkpoint; `docs/query_profile.py` prints it).
     hist = (
         docs.groupBy(F.col("n_chars").alias("v"))
         .agg(F.count(F.lit(1)).alias("cnt"))

@@ -234,6 +234,32 @@ def test_run_query_cli_list_and_json(spark, capsys):
     assert main(["no_such_query"]) == 1
 
 
+def test_run_query_explain_prints_the_final_plan(spark, sf_small, capsys):
+    """--explain prints the plan of the DataFrame the CLI collected, after
+    the action, so the adaptive plan is the final one."""
+    from mapreduce__spark.run_query import main
+
+    assert main(["groupby_count", "--sf-dir", sf_small, "--explain"]) == 0
+    out = capsys.readouterr().out
+    assert "purchase" in out
+    assert "== Final Plan ==" in out and "isFinalPlan=true" in out
+
+
+def test_run_query_table_renders_like_show(spark, sf_small, capsys):
+    """The table format renders the rows it collected through show(); with
+    --limit 0 (every row) the output matches show() on the query itself."""
+    from mapreduce__spark.plans import REGISTRY
+    from mapreduce__spark.run_query import main
+
+    name = "shipping_priority"  # ordered; bigint, double, string, timestamp
+    assert main([name, "--sf-dir", sf_small, "--limit", "0"]) == 0
+    out = capsys.readouterr().out
+    df = REGISTRY[name].fn(spark, sf_small)
+    df.show(n=df.count(), truncate=40)
+    assert out == capsys.readouterr().out
+    assert out.count("\n") > 5
+
+
 def test_formatted_lines_keeps_null_field_slots(spark):
     """concat_ws skips NULL arguments — a NULL field must still occupy
     its slot (empty string), or every later field shifts left and any
