@@ -3,7 +3,7 @@
 
 PY ?= python3
 
-.PHONY: test bench profile search smoke oracle-sf01
+.PHONY: test bench perf perf-selftest profile search smoke oracle-sf01
 
 # The tier-1 gate (ROADMAP.md): every core, shared local dirs, a hard
 # timeout, and a collection error reported without hiding the rest.
@@ -13,6 +13,17 @@ test:
 
 bench:
 	$(PY) bench.py
+
+# One closed-loop run of a BENCHMARK.json workload,
+# e.g. make perf W=search_relational SEED=3
+W ?= graph_vector_ingest
+SEED ?= 1
+perf:
+	$(PY) perfbench/run.py --workload $(W) --seed $(SEED) --seconds 25
+
+# The benchmark harness's own tests (event-log parser, spans, oracle).
+perf-selftest:
+	$(PY) -m pytest perfbench/tests -q
 
 # Two-scale oracle gate: the FULL DuckDB differential at sf0.1 (10x the
 # driver compare scale). Round-close gate — it has caught bugs the

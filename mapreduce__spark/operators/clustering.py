@@ -194,7 +194,7 @@ def pq_fit(
 
     Corpora of at most KMEANS_DRIVER_MAX_VECS vectors of at most
     KMEANS_DRIVER_MAX_CELLS // KMEANS_DRIVER_MAX_VECS dims run on the
-    driver from ONE staging.bounded_int64 probe, which also yields the
+    driver (staging.bounded_int64 decides), whose probe also yields the
     seeds: the iterations and the final encoding both use the probe's
     vectors, and the codes return through ``createDataFrame`` — the
     probe is the fit's only Spark job. Larger corpora, and NULL or
@@ -202,16 +202,12 @@ def pq_fit(
     partial-sums pass per iteration covering every subspace, and a
     ``mapInArrow`` encoding pass — which fails loudly on the latter.
     Both paths return the same rows and schema (tested)."""
-    q = _quantized(embeddings, vec_col).localCheckpoint(eager=False)
-
     # a vector wider than the cap probes as NULL, so the probe holds at
     # most KMEANS_DRIVER_MAX_CELLS values before any width is known
     cap = KMEANS_DRIVER_MAX_CELLS // max(KMEANS_DRIVER_MAX_VECS, 1)
-    local = bounded_int64(
-        q.select("vec_id", F.when(F.size("eq") <= cap, F.col("eq")).alias("eq")),
-        ["vec_id", "eq"],
-        KMEANS_DRIVER_MAX_VECS,
-    )
+    eq = F.when(F.size("eq") <= cap, F.col("eq"))
+    q = _quantized(embeddings, vec_col)
+    local, q = bounded_int64(q, ["vec_id", eq], KMEANS_DRIVER_MAX_VECS)
     if local is not None:
         vec_ids, vecs = local
         seeds = vecs[np.argsort(vec_ids, kind="stable")[:k]]

@@ -584,11 +584,16 @@ def lsh_near_duplicate_pairs(
     # ids) — the guard job is skipped.
     if text_source is not None:
         _check_text_source_covers(cand_ids, cand_grams)
+    # Sort-merge joins, pinned by hint: both inputs are checkpoints with
+    # no size stats, so AQE would pick a broadcast build side at run time
+    # from whichever shuffle finished first, and the plan (and its job
+    # count) changed from run to run. The grams shuffle once; the second
+    # join reuses that exchange.
     ga1 = cand_grams.select(F.col("doc_id").alias("gid1"), F.col("grams").alias("g1"))
     ga2 = cand_grams.select(F.col("doc_id").alias("gid2"), F.col("grams").alias("g2"))
     paired = (
-        candidates.join(ga1, F.col("id1") == F.col("gid1"))
-        .join(ga2, F.col("id2") == F.col("gid2"))
+        candidates.join(ga1.hint("merge"), F.col("id1") == F.col("gid1"))
+        .join(ga2.hint("merge"), F.col("id2") == F.col("gid2"))
     )
     common = F.size(F.array_intersect(F.col("g1"), F.col("g2")))
     jac = common / (F.size("g1") + F.size("g2") - common)

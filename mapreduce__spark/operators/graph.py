@@ -3,15 +3,15 @@
 peeling.
 
 Every operator here has two paths behind one seam,
-:func:`staging.bounded_int64`: an edge list of at most ``*_DRIVER_MAX_EDGES``
-integral, non-NULL rows comes back from one bounded Arrow probe as int64
-arrays and is solved in NumPy (or a union-find) on the driver; anything
-larger, or outside that contract, runs the distributed DataFrame
-algorithm. Both paths return the same rows and schema (property-tested
-against each other); the bounds are module constants, and tests force the
-distributed path by setting one to 0. At bench scale the operators are
-bound by Spark job scheduling, not compute, which is what the driver
-paths remove.
+:func:`staging.bounded_int64`, which checkpoints the edge list and probes
+it: at most ``*_DRIVER_MAX_EDGES`` integral, non-NULL rows come back as
+int64 arrays and are solved in NumPy (or a union-find) on the driver;
+anything larger, or outside that contract, runs the distributed DataFrame
+algorithm on the checkpoint the seam returns. Both paths return the same
+rows and schema (property-tested against each other); the bounds are
+module constants, and tests force the distributed path by setting one to
+0. At bench scale the operators are bound by Spark job scheduling, not
+compute, which is what the driver paths remove.
 
 Connected components: near-dup detection yields PAIRS; dedup policy
 needs CLUSTERS ("keep one representative per group of mutually-similar
@@ -100,13 +100,11 @@ def propagate_mass(
     summation order would make cross-engine bit-equality luck), so any k
     is exactly oracle-checkable by unrolled SQL.
 
-    Driver path: the edge list is checkpointed lazily, then probed by
-    staging.bounded_int64 (the count_triangles order — the probe's job
-    fills the checkpoint, so the upstream edge plan runs once on either
-    path). At most :data:`MASS_DRIVER_MAX_EDGES` integral, non-NULL
-    edges run all k supersteps in NumPy (:func:`_propagate_mass_driver`)
-    and return through ``createDataFrame``: the probe is the query's one
-    Spark job instead of a join + groupBy chain per superstep. Identical
+    Driver path (staging.bounded_int64 decides): at most
+    :data:`MASS_DRIVER_MAX_EDGES` integral, non-NULL edges run all k
+    supersteps in NumPy (:func:`_propagate_mass_driver`) and return
+    through ``createDataFrame``: the probe is the query's one Spark
+    job instead of a join + groupBy chain per superstep. Identical
     rows and schema (tested against the loop below).
 
     Distributed path (larger graphs, NULL or non-integral ids): the
@@ -133,8 +131,7 @@ def propagate_mass(
 
     from mapreduce__spark.operators.windows import idiv
 
-    e0 = edges.select("c", "s").localCheckpoint(eager=False)
-    local = bounded_int64(e0, ["c", "s"], MASS_DRIVER_MAX_EDGES)
+    local, e0 = bounded_int64(edges.select("c", "s"), ["c", "s"], MASS_DRIVER_MAX_EDGES)
     if local is not None:
         key = "c" if k % 2 == 0 else "s"
         node, mass = _propagate_mass_driver(*local, k, initial_mass)
@@ -296,22 +293,15 @@ def count_triangles(
     edge-sized relation at true graph scale is exactly the non-scalable
     shape the guard exists to prevent (the _probe_ids pattern).
 
-    Driver path: the edge list is checkpointed, then probed by
-    staging.bounded_int64. Graphs of at most TRIANGLES_DRIVER_MAX_EDGES
-    integral, non-NULL edges with no self-loop or repeated pair are
-    counted in NumPy by :func:`_count_triangles_driver` — the same
-    orientation, wedges closed in fixed-size blocks — and return through
+    Driver path (staging.bounded_int64 decides): graphs of at most
+    TRIANGLES_DRIVER_MAX_EDGES integral, non-NULL edges with no
+    self-loop or repeated pair are counted in NumPy by
+    :func:`_count_triangles_driver` — the same orientation, wedges closed in fixed-size blocks — and return through
     ``createDataFrame``, like k_core_layers' driver peel: 4 Spark jobs
     instead of ~15 at bench scale, identical rows (tested). Everything
-    else runs the distributed form above on the same checkpoint, so the
-    upstream edge plan runs once either way."""
-    # checkpoint FIRST, then probe (the connected_components order): the
-    # upstream edge plan runs once whichever path follows. Lazy: the
-    # probe's job computes the checkpoint's partitions and persists them
-    # (Spark fills in any partition the limit did not reach).
+    else runs the distributed form above."""
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    e = e.localCheckpoint(eager=False)
-    local = bounded_int64(e, ["u", "v"], TRIANGLES_DRIVER_MAX_EDGES)
+    local, e = bounded_int64(e, ["u", "v"], TRIANGLES_DRIVER_MAX_EDGES)
     found = _count_triangles_driver(*local) if local is not None else None
     if found is not None:
         # node takes the common type of u and v, as on the distributed path
@@ -386,21 +376,12 @@ def connected_components(
     `edges` is an undirected pair list (each pair once, any orientation).
     Under :data:`CC_DRIVER_MAX_EDGES` integral, non-NULL edges a driver
     union-find finishes the job; otherwise the distributed
-    label-propagation loop below runs. Same result either way (tested).
-
-    The edge list is eagerly materialized FIRST: it is narrow (two ids) but
-    its upstream plan is typically the whole LSH+verify pipeline, and this
-    operator re-reads edges multiple times (the probe on the driver path;
-    every propagation round re-derives `sym` on the distributed path).
-    Without materialization the LSH candidate join re-executes per
-    action/round — measured 2x on the flagship pipeline.
-    (A probe-first variant that skipped this checkpoint was tried and
-    REVERTED: `limit(N).collect()` on the lazy plan executes it through
-    CollectLimit's incremental partition-wave strategy, re-running the
-    candidate join subtree per wave — measured ~1.6x on the flagship.)
+    label-propagation loop below runs on the seam's checkpoint, which
+    every round re-reads (the edges' upstream is typically the whole
+    LSH+verify pipeline). Same result either way (tested).
     """
-    edges = edges.select(src, dst).localCheckpoint(eager=True)
-    local = bounded_int64(edges, [src, dst], CC_DRIVER_MAX_EDGES)
+    edges = edges.select(src, dst)
+    local, edges = bounded_int64(edges, [src, dst], CC_DRIVER_MAX_EDGES)
     if local is not None:
         parent: dict = {}
 
@@ -414,12 +395,18 @@ def connected_components(
             ra, rb = find(parent.setdefault(a, a)), find(parent.setdefault(b, b))
             # union by MIN id so the representative is the smallest node
             parent[max(ra, rb)] = min(ra, rb)
+        node, comp = np.array([(n, find(n)) for n in parent], np.int64).reshape(-1, 2).T
         # node/component take the COMMON type of src and dst via the same
         # union coercion the distributed path applies, so both paths
         # return one schema (and wider dst ids are not narrowed)
         t = edges.select(src).unionAll(edges.select(dst)).schema[0].dataType
+        # through pandas, like the other driver paths: the result is a
+        # local relation of known size, so a join against it is planned
+        # as a broadcast up front. A Python list would come back as an RDD
+        # of unknown size, and AQE's join choice (and the job count) would
+        # then turn on which of the join's map stages finished first.
         return edges.sparkSession.createDataFrame(
-            [(n, find(n)) for n in parent],
+            pd.DataFrame({"node": node, "component": comp}),
             f"node {t.simpleString()}, component {t.simpleString()}",
         )
 
@@ -579,7 +566,7 @@ def k_core_layers(
     identical rows (tested against the distributed path), node ids
     returned as bigint either way."""
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    local = bounded_int64(e, ["a", "b"], KCORE_DRIVER_MAX_EDGES)
+    local, e = bounded_int64(e, ["a", "b"], KCORE_DRIVER_MAX_EDGES)
     if local is not None:
         return _k_core_layers_driver(edges.sparkSession, *local, k, max_rounds)
     adj = e.unionAll(

@@ -22,8 +22,12 @@ Both shapes truncate lineage and are value-identical
 The driver-or-distributed seam lives here too: :func:`bounded_int64`
 decides for propagate_mass, connected_components, k_core_layers,
 count_triangles and pq_fit (which kmeans_fit is the one-subspace case
-of). Under its bound pq_fit fits AND encodes from the probe's arrays, so
-every kmeans_fit/pq_fit caller reads its vectors once.
+of), and it alone owns the checkpoint-then-probe policy: the candidate
+frame is checkpointed lazily once, the bounded probe's job fills that
+checkpoint, and the operator runs whichever path follows on the frame
+the seam returns, so the upstream plan runs once either way. Under its
+bound pq_fit fits AND encodes from the probe's arrays, so every
+kmeans_fit/pq_fit caller reads its vectors once.
 """
 
 from __future__ import annotations
@@ -69,27 +73,42 @@ def int64_matrix(lists: pa.ListArray, width: int | None = None):
     return flat.to_numpy().astype(np.int64, copy=False).reshape(len(lists), width)
 
 
-def bounded_int64(df: DataFrame, cols: list[str], max_rows: int):
-    """``cols`` as int64 arrays (1-D, or ``(n, width)`` for integer lists)
-    from ONE ``limit(max_rows + 1)`` Arrow job, or ``None`` — run the
-    distributed path — past ``max_rows`` rows or on a non-integral
-    column, a NULL value or element, or ragged or zero-width lists."""
+def bounded_int64(df: DataFrame, cols: list, max_rows: int):
+    """``(arrays, frame)``: ``frame`` is ``df`` checkpointed, and
+    ``arrays`` holds ``cols`` (names or Column expressions over ``df``)
+    as int64 arrays, 1-D or ``(n, width)`` for integer lists, from ONE
+    ``limit(max_rows + 1)`` Arrow job over ``frame`` — or is ``None``
+    (run the distributed path on ``frame``) past ``max_rows`` rows or on
+    a non-integral column, a NULL value or element, or ragged or
+    zero-width lists.
+
+    The checkpoint is lazy and comes first, so the upstream plan runs
+    once whichever path follows: the probe's job computes the
+    checkpoint's partitions and persists them (Spark fills in any
+    partition the limit did not reach), and the distributed path reads
+    them back. Without it the distributed path re-runs the upstream the
+    probe already ran, and a probe of the bare plan re-runs its last
+    stage per ``CollectLimit`` partition wave (a probe-first
+    connected_components without a checkpoint measured ~1.6x on the
+    dedup flagship). It is not eager either: an eager checkpoint is one
+    more job over the same partitions the probe's job fills."""
+    df = df.localCheckpoint(eager=False)
     head = df.select(*cols).limit(max_rows + 1).toArrow()
     if head.num_rows > max_rows:
-        return None
+        return None, df
     out = []
-    for name in cols:
-        col = head.column(name).combine_chunks()
+    for col in head.columns:
+        col = col.combine_chunks()
         if pa.types.is_list(col.type) and pa.types.is_integer(col.type.value_type):
             arr = int64_matrix(col)
             if arr is None or arr.shape[1] == 0:
-                return None
+                return None, df
         elif pa.types.is_integer(col.type) and not col.null_count:
             arr = col.to_numpy().astype(np.int64, copy=False)
         else:
-            return None
+            return None, df
         out.append(arr)
-    return out
+    return out, df
 
 
 def stage(df: DataFrame, staging_dir: str | None, name: str) -> DataFrame:

@@ -95,9 +95,12 @@ SATURATED_AT = 4
 # a later round, so it never needs removing after the driver re-attests.
 # Round 15's record predates the driver paths of connected_components,
 # k_core_layers, count_triangles, propagate_mass, pq_fit / kmeans_fit and
-# kmeans_assign; these are every registered query that calls one.
+# kmeans_assign, and the sort-merge verification joins of
+# lsh_near_duplicate_pairs; these are every registered query that calls one.
 CHANGED_SINCE: dict[str, int] = dict.fromkeys(
     (
+        # lsh_near_duplicate_pairs (the next two and both pipelines too)
+        "dedup_lsh_minhash",
         # connected_components
         "entity_resolution_parts",
         "training_data_pipeline",

@@ -7,10 +7,11 @@ from __future__ import annotations
 from itertools import combinations
 from unittest import mock
 
+import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
-from mapreduce__spark.operators import graph
+from mapreduce__spark.operators import clustering, graph
 from mapreduce__spark.operators.graph import connected_components, count_triangles
 
 
@@ -388,3 +389,92 @@ def test_kcore_fixtures_converge_inside_the_unroll(spark, sf_small):
         (F.col("layer") > 0) & (F.col("residual_degree") >= KCORE_K)
     ).count()
     assert bad_core == 0 and bad_peel == 0
+
+
+def _pq_codes(up):
+    from pyspark.sql import functions as F
+
+    emb = up.select(
+        (up.u * 1000 + up.v).alias("vec_id"),
+        F.array(up.u / 4, up.v / 8, (up.u - up.v) / 16, up.u * up.v / 64).alias(
+            "embedding"
+        ),
+    )
+    return clustering.pq_fit(emb, 2, 4, 2)[0]
+
+
+# operator -> (module, driver bound, call on the tapped edge list up(u, v))
+SEAM_OPERATORS = {
+    "propagate_mass": (
+        graph,
+        "MASS_DRIVER_MAX_EDGES",
+        lambda up: graph.propagate_mass(
+            up.select(up.u.alias("c"), up.v.alias("s")), k=3
+        ),
+    ),
+    "count_triangles": (graph, "TRIANGLES_DRIVER_MAX_EDGES", count_triangles),
+    "connected_components": (
+        graph,
+        "CC_DRIVER_MAX_EDGES",
+        lambda up: connected_components(up, "u", "v"),
+    ),
+    "k_core_layers": (
+        graph,
+        "KCORE_DRIVER_MAX_EDGES",
+        lambda up: graph.k_core_layers(up, 3, 5),
+    ),
+    "pq_fit": (clustering, "KMEANS_DRIVER_MAX_VECS", _pq_codes),
+}
+
+
+@pytest.mark.parametrize("op", sorted(SEAM_OPERATORS))
+def test_seam_evaluates_upstream_once(spark, tmp_path, op):
+    """staging.bounded_int64 owns the checkpoint-then-probe policy, so
+    each operator evaluates its upstream plan once per call on either
+    path: at the default bound (driver path), at 10 (the bounded probe
+    reads 11 rows, then the distributed path runs) and at 0. The same
+    rows and column types come back at all three bounds.
+
+    The upstream is a tapped 200-edge graph behind a distinct, the shape
+    of k_core_peel's edge list. The tap is a Python UDF appending one
+    line per evaluated row to a file: an accumulator drops the updates of
+    the tasks a limit cancels, so it can read 0 for a probe that ran.
+    Bound 0 alone cannot catch a second evaluation, because Spark pushes
+    its limit(1) probe through the distinct and reads only a few rows."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    # a hub joined to every node keeps the component's diameter at 2, so
+    # the distributed connected_components converges in two rounds
+    rng = random.Random(7)
+    pairs = {(0, n) for n in range(1, 40)}
+    while len(pairs) < 200:
+        pairs.add(tuple(sorted(rng.sample(range(40), 2))))
+    tap_file = str(tmp_path / "tap")
+
+    def tap(x):
+        with open(tap_file, "a") as fh:
+            fh.write("x\n")
+        return x
+
+    tapped = F.udf(tap, "bigint").asNondeterministic()
+    base = spark.createDataFrame(sorted(pairs), "u bigint, v bigint")
+    module, bound_name, call = SEAM_OPERATORS[op]
+
+    results = {}
+    for bound in (getattr(module, bound_name), 10, 0):
+        open(tap_file, "w").close()
+        up = base.select(tapped("u").alias("u"), "v").distinct()
+        with mock.patch.object(module, bound_name, bound):
+            out = call(up)
+            rows = sorted(out.collect(), key=str)
+        with open(tap_file) as fh:
+            evaluated = len(fh.readlines())
+        assert evaluated == len(pairs), (
+            f"{op} at bound {bound}: upstream evaluated {evaluated} rows "
+            f"for {len(pairs)} input rows"
+        )
+        results[bound] = (out.dtypes, rows)
+    first, *rest = results.values()
+    assert first[1] and all(r == first for r in rest)

@@ -10,7 +10,13 @@ so a pin never goes stale below the code.
 
 The pins hold for this suite's session (tests/conftest.py: local[8], 8
 shuffle partitions, AQE on) at sf0.001, where every driver fast path
-applies.
+applies. A count is only a pin where the plan is fixed before it runs:
+where AQE picks a join strategy from whichever of the join's map stages
+finishes first, the number of jobs changes from pass to pass by one. The
+pins on dedup_clusters and training_data_pipeline rest on two such
+choices being made up front: connected_components' driver path returns
+a local relation of known size (joins against it broadcast at planning),
+and lsh_near_duplicate_pairs pins its verification joins to sort-merge.
 """
 
 from __future__ import annotations
@@ -21,6 +27,8 @@ from mapreduce__spark.plans import REGISTRY
 
 # query -> Spark jobs of one warm run (collect) at sf0.001
 JOBS_PER_WARM_RUN = {
+    "dedup_clusters": 17,
+    "training_data_pipeline": 27,
     "k_core_peel": 3,
     "graph_triangles": 4,
     "graph_mass_propagation": 4,

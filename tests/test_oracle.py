@@ -42,8 +42,11 @@ def test_query_matches_oracle(spark, sf_small, name):
 SEAM_QUERIES = [
     "ann_topk_pq_adc",
     "cluster_balanced_sample",
+    "dedup_clusters",
+    "dedup_keep_best",
     "embedding_cluster_outliers",
     "embedding_pq_codes",
+    "entity_resolution_parts",
     "graph_mass_propagation",
     "graph_mass_propagation_k4",
     "graph_triangles",

@@ -28,8 +28,8 @@ W_BYTES = "spark.shuffle.write_bytes"
 EXPECTED_TOP5 = [
     "graph_triangles",
     "graph_mass_propagation",
-    "inverted_index",
     "k_core_peel",
+    "inverted_index",
     "substring_dedup_windows",
 ]
 
