@@ -409,25 +409,6 @@ def ivf_topk(
     return _topk_per_query(scored, k)
 
 
-def embedding_near_dup_pairs(emb: DataFrame, threshold: float) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (id1<id2, cosine ≥ threshold),
-    all-pairs form — the ORACLE BASELINE only (O(N²); the declared engine
-    operator is :func:`embedding_near_dup_pairs_pruned`, which produces the
-    identical output through a pruned non-cartesian plan)."""
-    vecs = ensure_parallelism(emb).select(
-        "vec_id", as_double_vec(F.col("embedding")).alias("v")
-    )
-    a = vecs.select(F.col("vec_id").alias("id1"), F.col("v").alias("v1"))
-    b = vecs.select(F.col("vec_id").alias("id2"), F.col("v").alias("v2"))
-    s = cosine_sim(F.col("v1"), F.col("v2"))
-    return (
-        a.crossJoin(b)
-        .where(F.col("id1") < F.col("id2"))
-        .where(s >= threshold)
-        .select("id1", "id2", F.round(s, 4).alias("cosine"))
-    )
-
-
 def embedding_near_dup_pairs_pruned(
     emb: DataFrame,
     threshold: float,

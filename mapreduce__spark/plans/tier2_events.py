@@ -3,46 +3,10 @@
 from __future__ import annotations
 
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from mapreduce__spark.functions.text import (
-    LANG_STOPWORDS,
-    PII_EMAIL,
-    PII_IPV4,
-    PII_PHONE,
-    digit_ratio_expr,
-    lang_id_expr,
-    pii_count_expr,
-    pii_scrub_expr,
-    quality_keep_expr,
-    split_bucket_expr,
-    stopword_hits,
-    tokenize,
-    word_ngrams,
-)
-from mapreduce__spark.operators.dedup import (
-    chunk_containment_pairs,
-    lsh_incremental_pairs,
-    exact_duplicate_groups,
-    exact_jaccard_pairs,
-    lsh_near_duplicate_pairs,
-    minhash_signature,
-    simhash_fingerprint,
-)
-from mapreduce__spark.functions.vectors import as_double_vec, cosine_sim
-from mapreduce__spark.operators.kernel import run_map_reduce_df
-from mapreduce__spark.operators.multimodal import with_binary_payload
-from mapreduce__spark.operators.similarity import (
-    brute_force_topk,
-    embedding_near_dup_pairs_pruned,
-    lsh_topk,
-)
 from mapreduce__spark.plans.registry import query
 from mapreduce__spark.sources import load_table
 

@@ -113,14 +113,9 @@ def test_bench_contract(tmp_path):
         os.environ,
         SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
         SPARK_GRAFT_CPUS="4",
-        # the decade-scaling probe is exercised by its own covenants at
-        # bench time; here it would just synthesize a 10x corpus to prove
-        # JSON keys exist
+        # the scaling tiers synthesize replica corpora; their synthesis is
+        # covered by test_bench_replicas_are_disjoint_copies
         SPARK_GRAFT_SKIP_SCALING="1",
-        # this subprocess runs INSIDE a loaded pytest session — the
-        # wait-for-idle loop would burn the whole timeout waiting for the
-        # suite around it to finish (caught: round-9 full-suite run)
-        SPARK_GRAFT_IDLE_WAIT_S="0",
     )
     res = subprocess.run(
         [sys.executable, "bench.py"], capture_output=True, text=True,
@@ -131,34 +126,7 @@ def test_bench_contract(tmp_path):
     assert len(lines) == 1
     data = json.loads(lines[0])
     required = {"metric", "value", "unit", "queries", "sf"}
-    optional = {
-        "scaling",
-        "scaling_note",
-        "baseline",
-        "deltas_vs_baseline",
-        "methodology",
-        "staging",
-        # round-8 noise-discipline fields (always contention; reruns
-        # only when a query breached the regression factor first-pass)
-        "contention",
-        "reruns",
-        # round-8 line-budget fields: the driver parses the JSON out of
-        # the LAST 2000 chars of stdout, so bench trims optional blocks
-        # (recording them in "trimmed") when the line would outgrow it
-        "deltas_note",
-        "trimmed",
-        # round-13 contention hardening: median-drift factor, the
-        # drift-normalized (code-attributable) deltas, and the stamp a
-        # contended start + lockstep drift triggered a whole-session
-        # re-measure
-        "drift",
-        "deltas_adj",
-        "session_rerun",
-        # round-14 cumulative-drift predicate: per-query ratio vs the
-        # BEST of the last three committed rounds, so stair-step
-        # regressions under the single-round trigger can't hide
-        "cumulative_drift",
-    }
+    optional = {"methodology", "staging", "scaling", "scaling_note"}
     assert required <= set(data) and set(data) <= required | optional
     assert data["sf"] == 0.001 and data["unit"] == "sec" and data["value"] > 0
     # the driver's 2000-char stdout window is the hard ceiling; bench
@@ -168,40 +136,40 @@ def test_bench_contract(tmp_path):
     assert len(data["queries"]) == len(BENCH_QUERIES)
 
 
-def test_bench_best_of_recent_rounds():
-    """The cumulative-drift floor (round-13 VERDICT item 2) must be the
-    per-query MIN over the newest three committed same-sf bench records —
-    pinned against the real BENCH_r*.json files so a parser regression
-    (sf filter, round ordering, non-numeric entries) can't silently turn
-    the predicate into a no-op."""
-    import glob
-    import json as _json
-    import re as _re
+def test_bench_replicas_are_disjoint_copies(spark, sf_small, tmp_path, monkeypatch):
+    """Each scaling corpus is `factor` key-disjoint copies of its source:
+    factor x the rows, every key column equal to source * factor + r for
+    r in 0..factor-1, and the document tokens tagged per replica."""
+    import bench
 
-    from bench import _best_of_recent_rounds
-
-    rounds = []
-    for path in glob.glob("/root/repo/BENCH_r*.json"):
-        m = _re.search(r"BENCH_r(\d+)\.json$", path)
-        if not m:  # e.g. BENCH_r14_c8.json, a core-count variant
-            continue
-        with open(path) as f:
-            parsed = _json.load(f).get("parsed") or {}
-        if parsed.get("sf") == 0.1 and parsed.get("queries"):
-            rounds.append((int(m.group(1)), parsed["queries"]))
-    rounds.sort(reverse=True)
-    expected = {}
-    for _, qs in rounds[:3]:
-        for n, s in qs.items():
-            if isinstance(s, (int, float)) and s > 0:
-                expected[n] = min(expected.get(n, float("inf")), float(s))
-    got = _best_of_recent_rounds(0.1)
-    assert got == expected
-    if rounds:  # committed history: the floor must be non-trivial
-        assert got, "best-of-last-3 came back empty despite committed records"
-        assert all(v > 0 for v in got.values())
-    # an sf with no committed records yields an empty floor, not a crash
-    assert _best_of_recent_rounds(123.456) == {}
+    factor = 3
+    monkeypatch.setattr(bench, "SCALE_ROOT", str(tmp_path))
+    for corpus, tables in bench.CORPORA.items():
+        out_dir = bench._replica_dir(spark, sf_small, factor, corpus)
+        for table, (keys, _) in tables.items():
+            src = spark.read.parquet(f"{sf_small}/{table}.parquet")
+            got = spark.read.parquet(f"{out_dir}/{table}.parquet")
+            assert got.count() == factor * src.count(), (corpus, table)
+            want = Counter(
+                tuple(row[k] * factor + r for k in keys)
+                for row in src.select(*keys).collect()
+                for r in range(factor)
+            )
+            assert Counter(tuple(row) for row in got.select(*keys).collect()) == want
+    docs = {
+        row.doc_id: row.text
+        for row in spark.read.parquet(
+            f"{bench._replica_dir(spark, sf_small, factor, 'docs')}/documents.parquet"
+        ).collect()
+    }
+    tags: dict[int, set[str]] = {r: set() for r in range(factor)}
+    for row in spark.read.parquet(f"{sf_small}/documents.parquet").collect():
+        for r in range(factor):
+            toks = [t.rsplit("_", 1) for t in docs[row.doc_id * factor + r].split(" ")]
+            assert [t for t, _ in toks] == row.text.split(" ")
+            tags[r].update(tag for _, tag in toks)
+    assert all(len(t) == 1 for t in tags.values()), tags
+    assert len(set().union(*tags.values())) == factor
 
 
 def test_text_sink(spark, sf_small, tmp_path):

@@ -145,52 +145,6 @@ def test_kn_probabilities_sum_to_one_per_context(spark, sf_small):
 
 
 # ---------------------------------------------------------------------------
-# bench contention hardening (round-12 VERDICT item 2)
-# ---------------------------------------------------------------------------
-
-
-def test_drift_adjust_separates_code_from_lockstep_drift():
-    """The r12 failure mode: every untouched query drifted 1.05-1.41x in
-    lockstep under host load. The median-drift normalization must read
-    ~1.0 for the untouched queries and keep flagging the one real
-    regression."""
-    from bench import _drift_adjust
-
-    deltas = {f"q{i}": 1.3 for i in range(10)}
-    deltas["real_regression"] = 2.8
-    drift, adj = _drift_adjust(deltas)
-    assert drift == 1.3
-    for i in range(10):
-        assert adj[f"q{i}"] == 1.0
-    assert adj["real_regression"] > 2.0
-
-    # an idle session passes through untouched
-    drift, adj = _drift_adjust({"a": 1.0, "b": 0.98, "c": 1.02})
-    assert drift == 1.0 and adj["a"] == 1.0
-
-    # empty deltas (no baseline) must not divide by zero
-    assert _drift_adjust({}) == (1.0, {})
-
-
-def test_contention_snapshot_trips_on_load5(monkeypatch):
-    """r12 waited out load1 and still ran hot at load5 3.38 — a high
-    5-minute average with a calm 1-minute one must now read contended so
-    the idle wait keeps holding."""
-    import os as _os
-
-    import bench
-
-    monkeypatch.setattr(_os, "getloadavg", lambda: (0.5, 3.5, 2.0))
-    monkeypatch.setattr(_os, "listdir", lambda p: [])
-    snap = bench._contention_snapshot()
-    assert snap["contended"] and snap["load5"] == 3.5
-
-    monkeypatch.setattr(_os, "getloadavg", lambda: (0.5, 1.0, 2.0))
-    snap = bench._contention_snapshot()
-    assert not snap["contended"]
-
-
-# ---------------------------------------------------------------------------
 # dedup_edit_distance: Pass-Join blocking is lossless
 # ---------------------------------------------------------------------------
 
