@@ -1,6 +1,7 @@
 """Session lifecycle: the engine must survive a stop-and-recreate of the
 SparkSession (the table cache must not hand a dead session's DataFrames to
-the new one). Runs in a subprocess so the shared test session is untouched."""
+the new one, and ``get_spark``'s worker-daemon conf must carry over). Runs
+in a subprocess so the shared test session is untouched."""
 
 from __future__ import annotations
 
@@ -21,6 +22,25 @@ def run_once():
 a = run_once()
 b = run_once()  # brand-new session; cached plans from the dead one must not leak
 assert a == b == 275, (a, b)
+
+# get_spark's static daemon conf survives a stop-and-recreate, and the
+# recreated session's workers run the patched zipimporter
+import sys
+from mapreduce__spark.session import WORKER_DAEMON, get_spark
+
+def daemon_owner(batches):
+    import zipimport
+    import pandas as pd
+    for _ in batches:
+        pass
+    yield pd.DataFrame({"m": [zipimport.zipimporter.invalidate_caches.__module__]})
+
+want = WORKER_DAEMON if sys.version_info < (3, 13) else "zipimport"
+get_spark(cpus=2).stop()
+spark = get_spark(cpus=2)
+assert spark.sparkContext.getConf().get("spark.python.daemon.module") == WORKER_DAEMON
+assert spark.range(1).mapInPandas(daemon_owner, "m string").first().m == want
+spark.stop()
 print("LIFECYCLE_OK")
 """
 
